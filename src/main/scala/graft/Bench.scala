@@ -2,7 +2,6 @@ package graft
 import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
   * `SPARK_GRAFT_SF_DIR` and prints one JSON line.
@@ -24,13 +23,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-bench", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Task-CPU accounting alongside wall time: this host's CPU-burst
     // throttling makes single-run wall times noisy, so the stable
@@ -101,6 +94,9 @@ object Bench {
     def timed(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double, Boolean) = {
       val t0 = System.nanoTime()
       val c0 = cpuNs.sum()
+      // the query's name as the job group: an event log (or any listener)
+      // attributes every job of the pass, build-time jobs included
+      spark.sparkContext.setJobGroup(name, s"graft.Bench $name")
       val ok =
         try {
           graft.operators.Checkpoints.scoped(spark) {
@@ -113,6 +109,7 @@ object Bench {
             e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage).take(200))
           false
         }
+        finally spark.sparkContext.clearJobGroup()
       val wall = (System.nanoTime() - t0) / 1e9
       quiesce() // untimed: wall is already captured
       (wall, (cpuNs.sum() - c0) / 1e9, ok)

@@ -30,6 +30,10 @@ object GraftSession {
       // minhash_sig, ...) registered for spark.sql users out of the box
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      // the engine's `file:` file system: the stock one forks a `chmod`
+      // per created file and an `ls -ld` per listed status when the
+      // native libhadoop is absent (graft.io.NioLocalFileSystem)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.NioLocalFileSystem].getName)
 
   def get(appName: String = "graft"): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -80,8 +84,8 @@ final class Tables(spark: SparkSession, sfDir: String) {
     *
     *  - TIMESTAMP(NANOS): Spark refuses it by default
     *    (PARQUET_TYPE_ILLEGAL); under `spark.sql.legacy.parquet.
-    *    nanosAsLong=true` (set in [[GraftSession.builder]] and the
-    *    Verify/Bench mains — NOT mutated here, so reading `events` has
+    *    nanosAsLong=true` (set in [[GraftSession.builder]], which
+    *    the tests and every main use — NOT mutated here, so reading `events` has
     *    no side effect on unrelated reads) it reads as BIGINT nanos.
     *    Integer `DIV 1000` (never a double divide — 1.7e18 ns exceeds
     *    2^53) truncates toward zero exactly like DuckDB's ns→µs read.

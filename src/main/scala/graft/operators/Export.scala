@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StructField, StructType}
 
 import graft.functions.Hashing
 
@@ -159,31 +159,152 @@ object Export {
   /** 2^61 — the checksum modulus shared with [[Quality.tableChecksum]]. */
   private val ChecksumMod: Long = 1L << 61
 
+  /** One manifest row: a shard's row count, the range of its portable
+    * order key (None for an empty shard) and the order-independent
+    * checksum of its rows, mod 2^61. A manifest is small — nShards rows
+    * — so it is folded, compared and counted on the driver, never with
+    * a Spark job. */
+  private[graft] final case class ShardStat(shard: Int, nRows: Long,
+      minOrd: Option[Long], maxOrd: Option[Long], checksum: Long) {
+    def toRow: Row = Row(shard, nRows, minOrd.map(Long.box).orNull,
+      maxOrd.map(Long.box).orNull, checksum)
+  }
+
+  /** The manifest's columns: every manifest writer writes exactly these,
+    * and [[readManifest]] refuses a manifest whose files hold others. */
+  private[graft] val ManifestSchema: StructType = StructType(Seq(
+    StructField("shard", IntegerType), StructField("n_rows", LongType),
+    StructField("min_ord", LongType), StructField("max_ord", LongType),
+    StructField("checksum", LongType)))
+
   /** Per-shard manifest of an assigned frame: row count, min/max of the
     * portable order key, and the order-independent checksum of
-    * `checksumCols` — one aggregation pass, partial map-side combine,
-    * `nShards` output rows. DENSE over 0..nShards-1 (an empty shard is
-    * an explicit zero row, not an absence): the manifest's row count IS
-    * the export's shard count, which [[appendShards]] relies on. */
-  private def manifestOf(assigned: DataFrame, checksumCols: Seq[String],
-      nShards: Int): DataFrame = {
-    val present = assigned
-      .select(col("shard"), col("ord"),
-        Hashing.h60(Quality.rowEncoding(checksumCols))
-          .cast(DecimalType(38, 0)).as("__h"))
-      .groupBy("shard")
-      .agg(count(lit(1)).as("n_rows"),
-        min("ord").as("min_ord"),
-        max("ord").as("max_ord"),
-        expr(s"CAST(sum(__h) % ${ChecksumMod}L AS BIGINT)").as("checksum"))
-    assigned.sparkSession.range(nShards)
-      .select(col("id").cast("int").as("shard"))
-      .join(present, Seq("shard"), "left_outer")
-      .select(col("shard"),
-        coalesce(col("n_rows"), lit(0L)).as("n_rows"),
-        col("min_ord"), col("max_ord"),
-        coalesce(col("checksum"), lit(0L)).as("checksum"))
+    * `checksumCols` (the [[Quality.tableChecksum]] construction, grouped
+    * by shard) — ONE scan job: each task folds its rows into per-shard
+    * partials and the driver folds the partials (at most one per shard
+    * per task). DENSE over 0..nShards-1 (an empty shard is an explicit
+    * zero row, not an absence): the manifest's row count IS the
+    * export's shard count, which [[appendShards]] relies on. Rows whose
+    * shard is null or outside 0..nShards-1 are not counted. */
+  private[graft] def shardStats(assigned: DataFrame, checksumCols: Seq[String],
+      nShards: Int): IndexedSeq[ShardStat] = {
+    val rows = assigned.select(col("shard").cast("int"), col("ord").cast("long"),
+      Hashing.h60(Quality.rowEncoding(checksumCols)))
+    val partials = rows.queryExecution.toRdd.mapPartitions { it =>
+      val acc = scala.collection.mutable.HashMap.empty[Int, ShardStat]
+      it.foreach { r =>
+        if (!r.isNullAt(0)) {
+          val k = r.getInt(0)
+          val ord = if (r.isNullAt(1)) None else Some(r.getLong(1))
+          val one = ShardStat(k, 1L, ord, ord,
+            if (r.isNullAt(2)) 0L else r.getLong(2) % ChecksumMod)
+          acc(k) = acc.get(k).fold(one)(foldStat(_, one))
+        }
+      }
+      acc.valuesIterator
+    }.collect()
+    val byShard = partials.groupMapReduce(_.shard)(identity)(foldStat)
+    (0 until nShards).map(k => byShard.getOrElse(k, ShardStat(k, 0L, None, None, 0L)))
   }
+
+  /** One shard's two partial stats folded: counts add, ord ranges
+    * widen, checksums add mod 2^61 (both below 2^61, so the sum fits a
+    * long). */
+  private def foldStat(a: ShardStat, b: ShardStat): ShardStat = {
+    def pick(x: Option[Long], y: Option[Long], f: (Long, Long) => Long) =
+      (x ++ y).reduceOption(f)
+    ShardStat(a.shard, a.nRows + b.nRows, pick(a.minOrd, b.minOrd, math.min),
+      pick(a.maxOrd, b.maxOrd, math.max), (a.checksum + b.checksum) % ChecksumMod)
+  }
+
+  /** Per-shard merge of a published manifest with a batch's delta (or of
+    * several source manifests) — counts add, ord ranges fold, checksums
+    * add mod 2^61; a shard on one side only keeps its row. O(nShards),
+    * on the driver. Sorted by shard. */
+  private[graft] def mergeStats(old: Seq[ShardStat],
+      delta: Seq[ShardStat]): IndexedSeq[ShardStat] =
+    (old ++ delta).groupMapReduce(_.shard)(identity)(foldStat)
+      .values.toIndexedSeq.sortBy(_.shard)
+
+  /** A manifest as a DataFrame (a local relation — no file, no job to
+    * plan it). */
+  private[graft] def manifestFrame(spark: SparkSession,
+      stats: Seq[ShardStat]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(stats.map(_.toRow).asJava, ManifestSchema)
+  }
+
+  /** Write a manifest as one parquet file under `path`. */
+  private def writeManifest(spark: SparkSession, path: String,
+      stats: Seq[ShardStat]): Unit =
+    manifestFrame(spark, stats).coalesce(1).write.mode(SaveMode.Overwrite)
+      .parquet(path)
+
+  /** The manifest rows stored under `path`, read on the driver (a
+    * manifest is nShards rows; reading it through Spark would cost a
+    * schema-inference job plus a scan job per read), sorted by shard.
+    * Every data file must hold exactly [[ManifestSchema]]'s columns
+    * (by name and physical type; nullability is not checked) — a
+    * manifest missing a column must not read back as nulls. */
+  private[graft] def readManifestAt(spark: SparkSession,
+      path: String): IndexedSeq[ShardStat] = {
+    import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.io.ColumnIOFactory
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(conf)
+    if (!fs.exists(root))
+      throw new java.io.FileNotFoundException(s"no manifest at $path")
+    val want = ManifestSchema.fields.map(f =>
+      f.name -> (if (f.dataType == IntegerType) "INT32" else "INT64")).toMap
+    def show(cols: Map[String, String]) =
+      cols.toSeq.sorted.map { case (k, v) => s"$k: $v" }.mkString("[", ", ", "]")
+    val files = fs.listStatus(root).filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }
+    files.toIndexedSeq.flatMap { st =>
+      val in = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      try {
+        val schema = in.getFooter.getFileMetaData.getSchema
+        val got = schema.getFields.asScala.map(t =>
+          t.getName -> (if (t.isPrimitive) t.asPrimitiveType.getPrimitiveTypeName.name
+                        else "GROUP")).toMap
+        if (got != want)
+          throw new IllegalStateException(s"manifest file ${st.getPath} holds " +
+            s"columns ${show(got)}, expected ${show(want)}")
+        val io = new ColumnIOFactory().getColumnIO(schema)
+        val out = IndexedSeq.newBuilder[ShardStat]
+        var pages = in.readNextRowGroup()
+        while (pages != null) {
+          val rr = io.getRecordReader(pages, new GroupRecordConverter(schema))
+          var i = 0L
+          while (i < pages.getRowCount) {
+            val g = rr.read()
+            def opt(c: String): Option[Long] =
+              if (g.getFieldRepetitionCount(c) == 0) None
+              else Some(if (c == "shard") g.getInteger(c, 0).toLong else g.getLong(c, 0))
+            def must(c: String): Long = opt(c).getOrElse(throw new IllegalStateException(
+              s"manifest file ${st.getPath} holds a null $c"))
+            out += ShardStat(must("shard").toInt, must("n_rows"), opt("min_ord"),
+              opt("max_ord"), must("checksum"))
+            i += 1
+          }
+          pages = in.readNextRowGroup()
+        }
+        out.result()
+      } finally in.close()
+    }.sortBy(_.shard)
+  }
+
+  /** The published manifest's rows, sorted by shard — the read-once
+    * form for driver-side bookkeeping (shard count, row totals, folds). */
+  private[graft] def manifestRows(spark: SparkSession,
+      dir: String): IndexedSeq[ShardStat] =
+    readManifestAt(spark, manifestDir(dir))
 
   /** Export `df` as `nShards` parquet shard directories under
     * `dir/data/shard=K`, every file internally sorted by the portable
@@ -253,10 +374,7 @@ object Export {
     // schema rides a `_schema` sidecar in the manifest dir so the
     // export stays self-describing (readShards works) while empty.
     val written = readData(spark, dataDir(tmp), Some(assigned.schema))
-    manifestOf(written, checksumCols, nShards)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(manifestDir(tmp))
+    writeManifest(spark, manifestDir(tmp), shardStats(written, checksumCols, nShards))
     writeSchemaSidecar(spark, manifestDir(tmp), assigned.schema)
     writePlacementSidecar(spark, manifestDir(tmp), placement)
 
@@ -269,9 +387,12 @@ object Export {
     readManifest(spark, dir)
   }
 
-  /** The published manifest: one row per shard. */
+  /** The published manifest: one row per shard, in [[ManifestSchema]],
+    * sorted by shard. A snapshot taken at the call (the manifest is read
+    * on the driver, see [[readManifestAt]]), so a later manifest advance
+    * does not change a frame already returned. */
   def readManifest(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(manifestDir(dir))
+    manifestFrame(spark, manifestRows(spark, dir))
 
   /** The published shard data (all shards). Read under the `_schema`
     * sidecar (the export's authoritative shape) when one exists, not
@@ -400,7 +521,7 @@ object Export {
       "dropColumnsFromExport: checksumCols must not name a dropped column")
     IndexOps.recoverSwap(spark, dir)
     recoverDelete(spark, dir)
-    val n = readManifest(spark, dir).count().toInt
+    val n = manifestRows(spark, dir).size
     require(n > 0, s"dropColumnsFromExport: no manifest at $dir")
     val all = readShards(spark, dir)
     val have = all.columns.map(_.toLowerCase).toSet
@@ -541,15 +662,13 @@ object Export {
     * routine post-publish gate. */
   def verifyShards(spark: SparkSession, dir: String,
       checksumCols: Seq[String]): DataFrame = {
-    val expected = readManifest(spark, dir)
-    val nShards = expected.count().toInt
-    val actual = manifestOf(readShards(spark, dir), checksumCols, nShards)
-    val cmp = manifestCompare(actual, expected)
-    val bad = divergentShards(cmp)
+    val expected = manifestRows(spark, dir)
+    val actual = shardStats(readShards(spark, dir), checksumCols, expected.size)
+    val bad = divergentShards(actual, expected)
     if (bad.nonEmpty)
       throw new IllegalStateException(
         s"export at $dir diverges from its manifest in shards ${bad.mkString(", ")}")
-    cmp
+    manifestCompare(spark, actual, expected)
   }
 
   /** Tier-0 attestation: per-shard ROW COUNTS against the manifest,
@@ -563,8 +682,9 @@ object Export {
     * that is [[verifyShards]]' checksum, at full-scan cost. Returns the
     * per-shard compare; raises naming the diverging shards. */
   def verifyShardCounts(spark: SparkSession, dir: String): DataFrame = {
-    val expected = readManifest(spark, dir)
-    val nShards = expected.count().toInt
+    val rows = manifestRows(spark, dir)
+    val expected = manifestFrame(spark, rows)
+    val nShards = rows.size
     val counted = readShards(spark, dir).groupBy("shard")
       .agg(count(lit(1)).as("n_rows"))
     val dense = spark.range(nShards)
@@ -575,7 +695,7 @@ object Export {
         expected.select(col("shard"), col("n_rows").as("m_rows")),
         Seq("shard"), "full_outer")
       .withColumn("ok", col("n_rows") <=> col("m_rows"))
-    val bad = divergentShards(cmp)
+    val bad = cmp.filter(!col("ok")).select("shard").collect().map(_.get(0))
     if (bad.nonEmpty)
       throw new IllegalStateException(
         s"export at $dir diverges from its manifest ROW COUNTS in shards " +
@@ -595,40 +715,47 @@ object Export {
   def verifyShardSubset(spark: SparkSession, dir: String,
       checksumCols: Seq[String], shards: Seq[Int]): DataFrame = {
     require(shards.nonEmpty, "verifyShardSubset: empty shard subset")
-    val expected = readManifest(spark, dir)
-    val nShards = expected.count().toInt
+    val live = manifestRows(spark, dir)
+    val nShards = live.size
     require(shards.forall(s => s >= 0 && s < nShards),
       s"verifyShardSubset: shards ${shards.filterNot(s => s >= 0 && s < nShards)
         .mkString(", ")} outside 0..${nShards - 1}")
-    val keep = col("shard").isin(shards.map(Int.box): _*)
-    val actual = manifestOf(readShards(spark, dir).filter(keep),
-      checksumCols, nShards).filter(keep)
-    val cmp = manifestCompare(actual, expected.filter(keep))
-    val bad = divergentShards(cmp)
+    val keep = shards.toSet
+    val actual = shardStats(
+      readShards(spark, dir).filter(col("shard").isin(shards.map(Int.box): _*)),
+      checksumCols, nShards).filter(s => keep(s.shard))
+    val expected = live.filter(s => keep(s.shard))
+    val bad = divergentShards(actual, expected)
     if (bad.nonEmpty)
       throw new IllegalStateException(
         s"export at $dir diverges from its manifest in shards ${bad.mkString(", ")}")
-    cmp
+    manifestCompare(spark, actual, expected)
   }
 
   /** Per-shard comparison of a recomputed manifest against a published
-    * one: `ok` is null-safe equality of count, ord range and checksum.
-    * The construction [[verifyShards]] uses post-publish and
-    * [[compactExport]] uses PRE-swap. */
-  private def manifestCompare(actual: DataFrame, expected: DataFrame): DataFrame = {
-    val e = expected.select(
-      col("shard"), col("n_rows").as("m_rows"), col("min_ord").as("m_min"),
-      col("max_ord").as("m_max"), col("checksum").as("m_sum"))
-    actual.join(e, Seq("shard"), "full_outer")
-      .withColumn("ok",
-        col("n_rows") <=> col("m_rows") && col("min_ord") <=> col("m_min") &&
-          col("max_ord") <=> col("m_max") && col("checksum") <=> col("m_sum"))
+    * one: `ok` is equality of count, ord range and checksum (a shard on
+    * one side only is not ok). The construction [[verifyShards]] uses
+    * post-publish and [[compactExport]] uses PRE-swap. */
+  private def manifestCompare(spark: SparkSession, actual: Seq[ShardStat],
+      expected: Seq[ShardStat]): DataFrame = {
+    val (a, e) = (actual.map(s => s.shard -> s).toMap, expected.map(s => s.shard -> s).toMap)
+    val rows = (a.keySet ++ e.keySet).toSeq.sorted.map { k =>
+      def side(m: Map[Int, ShardStat]): Seq[Any] = m.get(k).fold(Seq[Any](null, null, null, null))(s =>
+        Seq(s.nRows, s.minOrd.map(Long.box).orNull, s.maxOrd.map(Long.box).orNull, s.checksum))
+      Row.fromSeq(k +: (side(a) ++ side(e) :+ (a.get(k) == e.get(k))))
+    }
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, StructType(
+      ManifestSchema.fields ++ Seq("m_rows", "m_min", "m_max", "m_sum")
+        .map(StructField(_, LongType)) :+ StructField("ok", BooleanType)))
   }
 
-  /** The shards a [[manifestCompare]] frame flags — one bounded
-    * driver materialization of at most nShards rows. */
-  private def divergentShards(cmp: DataFrame): Array[Any] =
-    cmp.filter(!col("ok")).select("shard").collect().map(_.get(0))
+  /** The shards whose recomputed stats differ from the published ones. */
+  private def divergentShards(actual: Seq[ShardStat],
+      expected: Seq[ShardStat]): Seq[Int] = {
+    val (a, e) = (actual.map(s => s.shard -> s).toMap, expected.map(s => s.shard -> s).toMap)
+    (a.keySet ++ e.keySet).toSeq.sorted.filter(k => a.get(k) != e.get(k))
+  }
 
   /** One shard, in its deterministic global order — after appends a
     * shard's rows are ord-sorted only WITHIN each generation's files,
@@ -661,13 +788,13 @@ object Export {
     val tmp = dataDir(dir) + ".compact.tmp"
     val (fs, _) = fsPath(spark, dir)
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    val live = readManifest(spark, dir)
-    val nShards = live.count().toInt
+    val live = manifestRows(spark, dir)
+    val nShards = live.size
     val src = readShards(spark, dir)
     // row total from the manifest (O(nShards)), NOT a corpus count —
     // the manifest is already this function's trusted compare baseline,
     // and a count here would be a third full scan of the export
-    val rows = live.agg(sum("n_rows")).head().getLong(0)
+    val rows = live.map(_.nRows).sum
     if (rows == 0L) return 0L
     val numFiles = math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
     src.repartitionByRange(numFiles, col("shard"), col("ord"))
@@ -676,9 +803,9 @@ object Export {
     // PRE-swap verification: recompute the manifest over the staged
     // rewrite and require it to match the live manifest exactly —
     // only then does the swap replace the good copy
-    val staged = manifestOf(readData(spark, tmp, Some(src.schema)),
+    val staged = shardStats(readData(spark, tmp, Some(src.schema)),
       checksumCols, nShards)
-    val bad = divergentShards(manifestCompare(staged, live))
+    val bad = divergentShards(staged, live)
     if (bad.nonEmpty) {
       fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
       throw new IllegalStateException(
@@ -717,8 +844,8 @@ object Export {
     // streaming sink's batch-entry recovery
     recoverDelete(spark, dir)
     requireHashPlacement(spark, dir, "appendShards")
-    val old = readManifest(spark, dir)
-    val nShards = old.count().toInt
+    val old = manifestRows(spark, dir)
+    val nShards = old.size
     require(nShards > 0, s"appendShards: no manifest at $dir")
     val assigned = shardAssign(df, idCol, nShards)
     requireSchemaMatch(spark, dir, assigned.schema, "appendShards")
@@ -728,8 +855,8 @@ object Export {
       .parquet(dataDir(dir))
     // delta manifest from the batch ALONE (the append's cost contract),
     // merged with the old manifest per shard
-    val merged = mergeManifest(old, manifestOf(assigned, checksumCols, nShards))
-    publishManifest(spark, dir, merged)
+    val merged = mergeStats(old, shardStats(assigned, checksumCols, nShards))
+    publishManifest(spark, dir, manifestFrame(spark, merged))
     readManifest(spark, dir)
   }
 
@@ -776,7 +903,7 @@ object Export {
     if (nShards == 0) repairShardCountWarning(spark, dir, derived)
     val n = if (nShards > 0) nShards else derived
     val data = readShards(spark, dir)
-    publishManifest(spark, dir, manifestOf(data, checksumCols, n))
+    publishManifest(spark, dir, manifestFrame(spark, shardStats(data, checksumCols, n)))
     // a repair from a LOST manifest dir also lost the `_schema` sidecar
     // (publishManifest only carries a surviving one) — rewrite it from
     // the data, or the schema-drift gate goes silently inert and a
@@ -801,7 +928,7 @@ object Export {
 
   private def repairShardCount(spark: SparkSession, dir: String): Int = {
     val (fs, _) = fsPath(spark, dir)
-    if (manifestExists(spark, dir)) readManifest(spark, dir).count().toInt
+    if (manifestExists(spark, dir)) manifestRows(spark, dir).size
     else {
       val d = new org.apache.hadoop.fs.Path(dataDir(dir))
       require(fs.exists(d), s"repairManifest: no data at $dir to repair from")
@@ -842,7 +969,8 @@ object Export {
     val tmp = manifestDir(dir) + ".new"
     val (fs, _) = fsPath(spark, dir)
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    manifest.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
+    manifest.select(ManifestSchema.fields.toIndexedSeq.map(f => col(f.name).cast(f.dataType)): _*)
+      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
     // the `_schema` and `_placement` sidecars live in the manifest dir;
     // a manifest swap must not orphan them or an emptied-then-appended
     // export goes dark / forgets its placement contract. `schemaOverride`
@@ -886,27 +1014,6 @@ object Export {
     val p = new org.apache.hadoop.fs.Path(manifestDir(dir), "_batch")
     readSmallFile(fs, p).map(_.trim.toLong)
   }
-
-  /** Per-shard merge of a published manifest with a batch's delta —
-    * counts add, ord ranges fold, checksums add mod 2^61; O(nShards)
-    * rows on both sides. */
-  private[graft] def mergeManifest(old: DataFrame, delta: DataFrame): DataFrame = {
-    val d = delta.select(col("shard"), col("n_rows").as("d_rows"),
-      col("min_ord").as("d_min"), col("max_ord").as("d_max"),
-      col("checksum").as("d_sum"))
-    old.join(d, Seq("shard"), "full_outer").select(
-      col("shard"),
-      (coalesce(col("n_rows"), lit(0L)) + coalesce(col("d_rows"), lit(0L))).as("n_rows"),
-      least(col("min_ord"), col("d_min")).as("min_ord"),
-      greatest(col("max_ord"), col("d_max")).as("max_ord"),
-      pmod(coalesce(col("checksum"), lit(0L)) + coalesce(col("d_sum"), lit(0L)),
-        lit(ChecksumMod)).as("checksum"))
-  }
-
-  /** The manifest of a batch alone, for merge-based advances. */
-  private[graft] def deltaManifest(assigned: DataFrame,
-      checksumCols: Seq[String], nShards: Int): DataFrame =
-    manifestOf(assigned, checksumCols, nShards)
 
   /** Combine published exports into one WITHOUT reading a data byte:
     * every source shard file MOVES (rename — a metadata operation on
@@ -998,9 +1105,11 @@ object Export {
         }
       }
     }
-    val manifests = liveSrcs.map(readManifest(spark, _))
-    val nShards = manifests.head.count()
-    require(manifests.forall(_.count() == nShards),
+    // each source manifest read ONCE, on the driver: the shard-count
+    // check, the fold and the row total below need no Spark job
+    val manifests = liveSrcs.map(manifestRows(spark, _))
+    val nShards = manifests.head.size
+    require(manifests.forall(_.size == nShards),
       s"concatExports: shard counts differ across ${liveSrcs.mkString(", ")}")
     // placement contracts must agree before a single file moves: a
     // hash source merged into an assigned source (or vice versa) would
@@ -1053,12 +1162,12 @@ object Export {
       }
     }
     // manifest: the commutative fold of the source manifests
-    val merged = manifests.reduce(mergeManifest)
+    val merged = manifests.reduce(mergeStats(_, _))
     // completed-publish guard (the post-publish crash window): sources
     // whose manifests claim rows but whose data is neither in a source
     // nor in staging were already merged into a published dst — a swap
     // here would replace the real merged data with an empty skeleton
-    val mergedRows = merged.agg(sum("n_rows")).head().getLong(0)
+    val mergedRows = merged.map(_.nRows).sum
     if (mergedRows > 0 && !hasDataFiles(fs, dataDir(tmp))) {
       require(fs.exists(dstPath),
         s"concatExports: sources claim $mergedRows rows but hold no data and " +
@@ -1080,10 +1189,9 @@ object Export {
       // LEAST what the surviving sources claim per shard (dst is the
       // fold of ALL original sources; survivors may be a subset after
       // a partial cleanup)
-      val dstShort = merged.select(col("shard"), col("n_rows").as("s_rows"))
-        .join(readManifest(spark, dst), Seq("shard"), "left_outer")
-        .filter(coalesce(col("n_rows"), lit(0L)) < col("s_rows"))
-        .select("shard").collect().map(_.get(0))
+      val dstRows = manifestRows(spark, dst).map(s => s.shard -> s.nRows).toMap
+      val dstShort = merged.filter(s => dstRows.getOrElse(s.shard, 0L) < s.nRows)
+        .map(_.shard)
       require(dstShort.isEmpty,
         s"concatExports: $dst is not the product of merging these sources " +
           s"(shards ${dstShort.mkString(", ")} hold fewer rows than the " +
@@ -1097,7 +1205,7 @@ object Export {
     // these skeletons (the guard above), making wrong-dst cleanup
     // impossible rather than merely improbable
     liveSrcs.foreach(writeMergedInto(fs, _, dst))
-    merged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(manifestDir(tmp))
+    writeManifest(spark, manifestDir(tmp), merged)
     // carry a schema sidecar from the first source that has one, and
     // the sources' (verified-common) placement kind
     liveSrcs.iterator.map(s => (s, readSchemaSidecar(spark, s)))
@@ -1194,7 +1302,7 @@ object Export {
     require(nShards >= 0, s"nShards must be non-negative, got $nShards")
     IndexOps.recoverSwap(spark, dir)
     recoverDelete(spark, dir)
-    val n = if (nShards > 0) nShards else readManifest(spark, dir).count().toInt
+    val n = if (nShards > 0) nShards else manifestRows(spark, dir).size
     require(n > 0, s"rebalanceExport: no manifest at $dir")
     // lazy read is safe for the same-dir rewrite, as in reshardExport:
     // balancedShards' totals pass and shardedWriteAssigned's staging
@@ -1229,7 +1337,7 @@ object Export {
     }
     IndexOps.recoverSwap(spark, src)
     recoverDelete(spark, src)
-    val n = if (nShards > 0) nShards else readManifest(spark, src).count().toInt
+    val n = if (nShards > 0) nShards else manifestRows(spark, src).size
     require(n > 0, s"rebalanceExportTo: no manifest at $src")
     val rows = readShards(spark, src).drop("shard", "ord")
     shardedWriteAssigned(spark, balancedShards(rows, idCol, weightCol, n),
@@ -1288,15 +1396,15 @@ object Export {
   def deleteFromExport(spark: SparkSession, dir: String, predicate: Column,
       checksumCols: Seq[String]): DataFrame = {
     recoverDelete(spark, dir)
-    val live = readManifest(spark, dir)
-    val nShards = live.count().toInt
+    val live = manifestRows(spark, dir)
+    val nShards = live.size
     require(nShards > 0, s"deleteFromExport: no manifest at $dir")
     val all = readShards(spark, dir)
     val matchPred = coalesce(predicate, lit(false))
     // bounded driver materialization: ≤ nShards shard ids
     val affected = all.filter(matchPred).select("shard").distinct()
       .collect().map(_.getInt(0)).sorted
-    if (affected.isEmpty) return live
+    if (affected.isEmpty) return manifestFrame(spark, live)
     // survivors of the affected shards ONLY — the scan prunes to their
     // partition directories; untouched shards' bytes never move
     val survivors = all.filter(col("shard").isin(affected.map(Int.box): _*))
@@ -1321,8 +1429,8 @@ object Export {
   def deleteIdsFromExport(spark: SparkSession, dir: String, ids: DataFrame,
       idCol: String, checksumCols: Seq[String]): DataFrame = {
     recoverDelete(spark, dir)
-    val live = readManifest(spark, dir)
-    val nShards = live.count().toInt
+    val live = manifestRows(spark, dir)
+    val nShards = live.size
     require(nShards > 0, s"deleteIdsFromExport: no manifest at $dir")
     val all = readShards(spark, dir)
     val dropIds = ids.select(col(idCol)).distinct()
@@ -1340,7 +1448,7 @@ object Export {
           .select("shard").distinct().collect().map(_.getInt(0)))
       else None
     val scanned = candidates match {
-      case Some(cs) if cs.isEmpty => return live
+      case Some(cs) if cs.isEmpty => return manifestFrame(spark, live)
       case Some(cs) => all.filter(col("shard").isin(cs.map(Int.box): _*))
       case None => all
     }
@@ -1348,7 +1456,7 @@ object Export {
     // here — a candidate shard with no matches is never rewritten)
     val affected = scanned.join(dropIds, Seq(idCol), "left_semi")
       .select("shard").distinct().collect().map(_.getInt(0)).sorted
-    if (affected.isEmpty) return live
+    if (affected.isEmpty) return manifestFrame(spark, live)
     val survivors = all.filter(col("shard").isin(affected.map(Int.box): _*))
       .join(dropIds, Seq(idCol), "left_anti")
     deleteCore(spark, dir, live, nShards, affected, survivors,
@@ -1405,16 +1513,14 @@ object Export {
     // metadata-only, and idempotent (a second recovery finds no staging).
     val prePath = new org.apache.hadoop.fs.Path(stagedRoot, "_premanifest")
     if (fs.exists(prePath)) {
-      val pre = spark.read.parquet(prePath.toString)
-      val restore = pre.filter(!col("shard").isin(completed.toSeq.map(Int.box): _*))
-      // bounded driver materialization: ≤ affected-shard rows
-      val restoreRows = restore.collect()
-      if (restoreRows.nonEmpty) {
-        val restoreShards = restoreRows.map(_.getAs[Int]("shard")).toSeq
-        val cur = readManifest(spark, dir)
+      // ≤ affected-shard rows, read on the driver
+      val restore = readManifestAt(spark, prePath.toString)
+        .filterNot(s => completed(s.shard))
+      if (restore.nonEmpty) {
+        val restoreShards = restore.map(_.shard).toSet
+        val cur = manifestRows(spark, dir).filterNot(s => restoreShards(s.shard))
         publishManifest(spark, dir,
-          cur.filter(!col("shard").isin(restoreShards.map(Int.box): _*))
-            .unionByName(restore))
+          manifestFrame(spark, (cur ++ restore).sortBy(_.shard)))
       }
     }
     fs.delete(new org.apache.hadoop.fs.Path(stagedRoot), true)
@@ -1423,7 +1529,7 @@ object Export {
   /** The delete family's staged rewrite: stage `survivors` for the
     * `affected` shards, publish the manifest FIRST, swap per shard,
     * clean up — the protocol documented on [[deleteFromExport]]. */
-  private def deleteCore(spark: SparkSession, dir: String, live: DataFrame,
+  private def deleteCore(spark: SparkSession, dir: String, live: Seq[ShardStat],
       nShards: Int, affected: Array[Int], survivors: DataFrame,
       schema: org.apache.spark.sql.types.StructType,
       checksumCols: Seq[String]): DataFrame = {
@@ -1450,17 +1556,18 @@ object Export {
     val prePath = new org.apache.hadoop.fs.Path(stagedRoot, "_premanifest")
     val preTmp = new org.apache.hadoop.fs.Path(stagedRoot, ".premanifest.tmp")
     fs.delete(preTmp, true)
-    live.filter(col("shard").isin(affected.map(Int.box): _*))
-      .coalesce(1).write.parquet(preTmp.toString)
+    val affectedSet = affected.toSet
+    writeManifest(spark, preTmp.toString, live.filter(s => affectedSet(s.shard)))
     require(fs.rename(preTmp, prePath),
       s"deleteFromExport: rename $preTmp -> $prePath failed")
     // manifest FIRST (see the protocol note): affected shards
     // recomputed from the staged bytes, untouched shards carried
-    val recomputed = manifestOf(
+    val recomputed = shardStats(
       readData(spark, stagedRoot, Some(schema)), checksumCols, nShards)
-      .filter(col("shard").isin(affected.map(Int.box): _*))
-    val untouched = live.filter(!col("shard").isin(affected.map(Int.box): _*))
-    publishManifest(spark, dir, untouched.unionByName(recomputed))
+      .filter(s => affectedSet(s.shard))
+    val untouched = live.filterNot(s => affectedSet(s.shard))
+    publishManifest(spark, dir,
+      manifestFrame(spark, (untouched ++ recomputed).sortBy(_.shard)))
     // per-shard swap: park the original inside the staging area, move
     // the staged dir in; each shard's two renames bracket the one
     // window the entry rollback above heals

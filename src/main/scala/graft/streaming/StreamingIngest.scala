@@ -2335,8 +2335,8 @@ object StreamingIngest {
     // `assigned` (balancedShards layout) before the first byte lands
     Export.requireHashPlacement(spark, dir, "shardedExportStream")
     if (!isCommitted(spark, dir, batchId)) {
-      val old = Export.readManifest(spark, dir)
-      val nShards = old.count().toInt
+      val old = Export.manifestRows(spark, dir)
+      val nShards = old.size
       require(nShards > 0, s"exportShardBatch: no manifest at $dir")
       val assignedBase = Export.shardAssign(batch, idCol, nShards)
       Export.requireSchemaMatch(spark, dir, assignedBase.schema,
@@ -2347,10 +2347,11 @@ object StreamingIngest {
       failpoint(1)
       // manifest advance — skipped on a replay whose merge already landed
       if (!Export.manifestBatch(spark, dir).contains(batchId)) {
-        val merged = Export.mergeManifest(old,
-          Export.deltaManifest(Export.shardAssign(batch, idCol, nShards),
+        val merged = Export.mergeStats(old,
+          Export.shardStats(Export.shardAssign(batch, idCol, nShards),
             checksumCols, nShards))
-        Export.publishManifest(spark, dir, merged, Some(batchId))
+        Export.publishManifest(spark, dir, Export.manifestFrame(spark, merged),
+          Some(batchId))
       }
       failpoint(2)
       commitBatch(spark, dir, batchId)
@@ -2403,18 +2404,15 @@ object StreamingIngest {
       val files = IndexOps.dataFileCount(spark, Export.dataDir(dir))
       // O(nShards) manifest read, no data scan — the trigger must stay
       // cheap enough to evaluate after every committed batch
-      val man = Export.readManifest(spark, dir)
-      val agg = man.agg(
-        org.apache.spark.sql.functions.sum("n_rows"),
-        org.apache.spark.sql.functions.count_if(col("n_rows") > 0)).head()
-      val rows = agg.getLong(0)
+      val man = Export.manifestRows(spark, dir)
+      val rows = man.map(_.nRows).sum
       // compaction cannot produce fewer than one file per NONEMPTY
       // shard (the rewrite partitions by shard directory), so the
       // post-compaction floor is max(nonempty shards, ceil(rows/target))
       // — with the bare ceil, a many-shard small export (64 shards,
       // rows under one target file) measures "fragmented" forever and
       // rewrites the whole corpus after every committed batch
-      val compacted = math.max(agg.getLong(1),
+      val compacted = math.max(man.count(_.nRows > 0).toLong,
         math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile))
       if (files >= compacted + compactAtFiles) {
         Export.compactExport(spark, dir, checksumCols, targetRowsPerFile)
@@ -2428,7 +2426,7 @@ object StreamingIngest {
         // subset (deterministic, no extra state to checkpoint) and
         // consecutive checks walk the shard ring — full coverage every
         // ceil(nShards / k) checks at O(k shards) per check
-        val nShards = Export.readManifest(spark, dir).count().toInt
+        val nShards = Export.manifestRows(spark, dir).size
         val k = math.min(verifyShardsPerCheck, nShards)
         val check = (batchId + 1) / verifyEvery - 1
         val start = ((check * k) % nShards).toInt

@@ -1,12 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object BenchOne {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder("graft-bench-one", "32").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val dir = "/root/testdata/sf0.1"
     for (name <- args) {

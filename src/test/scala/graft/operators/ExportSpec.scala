@@ -1077,4 +1077,96 @@ class ExportSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val g2 = Export.balancedShards(withNull, "doc_id", "w", 2, 4)
     assert(g2.filter(col("shard").isNull).isEmpty)
   }
+
+  test("manifest bookkeeping runs no Spark job of its own") {
+    val sc = spark.sparkContext
+    val (a, b, dst) = (tmp("jobs_a"), tmp("jobs_b"), tmp("jobs_dst"))
+    // the write (exchange + write), one scan of the written bytes, one
+    // manifest write — and nothing for reading the manifest back
+    val (_, writeJobs) = org.apache.spark.JobCount(sc) {
+      Export.shardedWrite(spark, docs.filter(col("doc_id") % 2 === 0), "doc_id", csCols, 8, a)
+    }
+    assert(writeJobs <= 4, s"shardedWrite ran $writeJobs jobs")
+    Export.shardedWrite(spark, docs.filter(col("doc_id") % 2 =!= 0), "doc_id", csCols, 8, b)
+    // renames plus one manifest write: the count check, fold and row
+    // total run on the driver over manifests read without Spark
+    val (merged, concatJobs) = org.apache.spark.JobCount(sc) {
+      Export.concatExports(spark, Seq(a, b), dst)
+    }
+    assert(concatJobs <= 3, s"concatExports ran $concatJobs jobs")
+    val ref = tmp("jobs_ref")
+    Export.shardedWrite(spark, docs, "doc_id", csCols, 8, ref)
+    assertSameRows(merged, Export.readManifest(spark, ref))
+  }
+
+  /** The Spark fold manifests were merged with before the driver-side
+    * fold: a full outer join on `shard`. */
+  private def sparkFold(old: org.apache.spark.sql.DataFrame,
+      delta: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val d = delta.select(col("shard"), col("n_rows").as("d_rows"),
+      col("min_ord").as("d_min"), col("max_ord").as("d_max"),
+      col("checksum").as("d_sum"))
+    old.join(d, Seq("shard"), "full_outer").select(
+      col("shard"),
+      (coalesce(col("n_rows"), lit(0L)) + coalesce(col("d_rows"), lit(0L))).as("n_rows"),
+      least(col("min_ord"), col("d_min")).as("min_ord"),
+      greatest(col("max_ord"), col("d_max")).as("max_ord"),
+      pmod(coalesce(col("checksum"), lit(0L)) + coalesce(col("d_sum"), lit(0L)),
+        lit(1L << 61)).as("checksum"))
+  }
+
+  test("driver-side manifest fold equals the Spark fold row for row") {
+    import Export.ShardStat
+    val near = (1L << 61) - 5 // two of these sum past 2^61 and must wrap
+    val old = Seq(
+      ShardStat(0, 3, Some(10L), Some(90L), near),
+      ShardStat(1, 0, None, None, 0L), // empty shard: null ord range
+      ShardStat(2, 5, Some(7L), Some(70L), 12345L),
+      ShardStat(3, 0, None, None, 0L))
+    val delta = Seq(
+      ShardStat(0, 2, Some(5L), Some(50L), near - 1),
+      ShardStat(1, 4, Some(40L), Some(44L), 99L),
+      ShardStat(2, 0, None, None, 0L),
+      ShardStat(3, 0, None, None, 0L),
+      ShardStat(4, 1, Some(1L), Some(1L), 1L)) // on one side only
+    val local = Export.mergeStats(old, delta)
+    val reference = sparkFold(Export.manifestFrame(spark, old), Export.manifestFrame(spark, delta))
+      .orderBy("shard").collect().toSeq
+    assert(local.map(_.toRow) == reference)
+    assert(local.head.checksum == (2 * near - 1) - (1L << 61))
+    // the one-job manifest scan equals a Spark aggregation of the same rows
+    val assigned = Export.shardAssign(docs.filter(col("doc_id") < 20), "doc_id", 32)
+    val stats = Export.shardStats(assigned, csCols, 32)
+    val agg = assigned.withColumn("__h", graft.functions.Hashing.h60(Quality.rowEncoding(csCols)))
+      .groupBy("shard").agg(count(lit(1)).as("n"), min("ord").as("lo"),
+        max("ord").as("hi"), expr(s"CAST(sum(CAST(__h AS DECIMAL(38,0))) % ${1L << 61}L AS BIGINT)").as("c"))
+      .collect().map(r => r.getInt(0) -> r).toMap
+    assert(stats.size == 32 && stats.exists(_.nRows == 0), "fixture must hold an empty shard")
+    stats.foreach { s =>
+      agg.get(s.shard) match {
+        case None => assert(s == ShardStat(s.shard, 0, None, None, 0L))
+        case Some(r) =>
+          assert(s == ShardStat(s.shard, r.getLong(1), Some(r.getLong(2)), Some(r.getLong(3)), r.getLong(4)))
+      }
+    }
+  }
+
+  test("readManifest refuses a manifest whose columns differ from the schema") {
+    val dir = tmp("manifest_schema")
+    Export.shardedWrite(spark, docs, "doc_id", csCols, 4, dir)
+    val m = Export.readManifest(spark, dir)
+    assert(m.schema == Export.ManifestSchema)
+    def rewrite(df: org.apache.spark.sql.DataFrame): Unit =
+      df.coalesce(1).write.mode("overwrite").parquet(Export.manifestDir(dir))
+    // a missing column would otherwise read back as nulls
+    rewrite(m.drop("checksum"))
+    val ex = intercept[IllegalStateException](Export.readManifest(spark, dir))
+    assert(ex.getMessage.contains("checksum"))
+    // a column of another type
+    rewrite(m.withColumn("shard", col("shard").cast("long")))
+    intercept[IllegalStateException](Export.manifestRows(spark, dir))
+    // an extra column
+    rewrite(m.withColumn("note", lit("x")))
+    intercept[IllegalStateException](Export.readManifest(spark, dir))
+  }
 }
