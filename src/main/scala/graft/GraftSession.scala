@@ -34,6 +34,24 @@ object GraftSession {
       // per created file and an `ls -ld` per listed status when the
       // native libhadoop is absent (graft.io.NioLocalFileSystem)
       .config("spark.hadoop.fs.file.impl", classOf[graft.io.NioLocalFileSystem].getName)
+      // The status store keeps up to 1000 finished jobs, 1000 stages,
+      // 100000 tasks per stage and 1000 SQL executions (with their plan
+      // metrics) even with the UI off, so a long-lived session's driver
+      // heap grows with every query it has run. Nothing in the engine
+      // reads the store; the last few stay for a debugger.
+      .config("spark.ui.retainedJobs", "100")
+      .config("spark.ui.retainedStages", "100")
+      .config("spark.ui.retainedTasks", "1000")
+      .config("spark.sql.ui.retainedExecutions", "50")
+      // Spark's shuffle-exchange, broadcast-exchange and result-stage
+      // pools start a new thread for every submission until they hold
+      // their maximum (1024, 128, 1024), and a thread lives 60 s: 40
+      // perfbench `etl` passes left ~960 live threads. A pool needs only
+      // as many threads as stages it runs at once; 16 is Spark's own
+      // bound for its subquery pool.
+      .config("spark.sql.shuffleExchange.maxThreadThreshold", "16")
+      .config("spark.sql.broadcastExchange.maxThreadThreshold", "16")
+      .config("spark.sql.resultQueryStage.maxThreadThreshold", "16")
 
   def get(appName: String = "graft"): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")

@@ -13,6 +13,18 @@ import org.apache.spark.sql.functions._
   */
 object Relational {
 
+  /** Exact, order-independent money sum, double out: equal bit for bit to
+    * `sum(c.cast("decimal(18,s)")).cast("double")` — the determinism rule
+    * that lets a sum hash-match the DuckDB oracle — summed by
+    * [[graft.functions.ExactMoneySum]] in two `long` limbs instead of a
+    * per-row decimal cast and a 28-digit decimal buffer. Works as a group
+    * aggregate, under `pivot`, and over a window. */
+  def sumMoney(c: Column, scale: Int = 2): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    ColumnBridge.column(graft.functions.ExactMoneySum(
+      ColumnBridge.expression(c), scale).toAggregateExpression())
+  }
+
   /** J1 — multi-key join with pandas-style suffix handling.
     *
     * The reference relies on pandas `merge(..., suffixes=('', '_y'))`

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -13,15 +13,12 @@ import graft.operators.Spread
   * Determinism rules (oracle hash-matches exactly):
   *  - money aggregates go through DECIMAL(18,s) so the sum is exact and
   *    association-order-independent, then cast to DOUBLE for a stable
-  *    output type on both engines;
+  *    output type on both engines (Spark side:
+  *    [[graft.operators.Relational.sumMoney]]);
   *  - every result carries a total ORDER BY;
   *  - no arbitrary-survivor dedup — ties always broken by a key column.
   */
 object ParityQueries {
-
-  /** Exact, order-independent sum: decimal accumulate, double out. */
-  private def sumMoney(c: Column, scale: Int = 2): Column =
-    sum(c.cast(s"decimal(18,$scale)")).cast("double")
 
   type Q = (SparkSession, String) => DataFrame
 
@@ -388,7 +385,7 @@ object ParityQueries {
         valueColumnName = "v")
       .groupBy("l_returnflag", "measure")
       .agg(count(lit(1)).as("n"),
-        sum(col("v").cast("decimal(18,2)")).cast("double").as("total"))
+        sumMoney(col("v")).as("total"))
       .orderBy("l_returnflag", "measure")
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.operators.Relational.sumMoney
 import graft.sources.Csv
 import graft.queries.ParityQueries.Q
 
@@ -51,8 +52,8 @@ object SourceQueries {
       .groupBy("l_returnflag")
       .agg(
         count(lit(1)).as("n"),
-        sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"),
-        sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double").as("sum_price"))
+        sumMoney(col("l_quantity")).as("sum_qty"),
+        sumMoney(col("l_extendedprice")).as("sum_price"))
       .orderBy("l_returnflag")
   }
 
@@ -75,7 +76,7 @@ object SourceQueries {
       .groupBy("o_orderstatus", "o_orderpriority")
       .agg(
         count(lit(1)).as("n"),
-        sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("total"))
+        sumMoney(col("o_totalprice")).as("total"))
       .orderBy("o_orderstatus", "o_orderpriority")
   }
 
@@ -106,7 +107,7 @@ object SourceQueries {
     typed.groupBy("s_nationkey")
       .agg(
         count(lit(1)).as("n"),
-        sum(col("s_acctbal").cast("decimal(18,2)")).cast("double").as("total_bal"),
+        sumMoney(col("s_acctbal")).as("total_bal"),
         max(col("s_name")).as("max_name"))
       .orderBy("s_nationkey")
   }
@@ -135,7 +136,7 @@ object SourceQueries {
       .groupBy("event_type")
       .agg(
         count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,6)")).cast("double").as("total_value"),
+        sumMoney(col("value"), 6).as("total_value"),
         min(col("event_id")).as("min_event"),
         max(col("ts")).as("max_ts"))
       .orderBy("event_type")

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.Relational.sumMoney
 import graft.operators.Temporal
 
 /** Temporal-join queries over the `events` stream table, each with a
@@ -136,7 +137,7 @@ object TemporalQueries {
   val q86ResampleLocf: Q = (spark, dir) => {
     val t = Tables(spark, dir)
     val day = 86400L * 1000000L
-    val exactMean = sum(col("value").cast("decimal(18,6)")).cast("double") /
+    val exactMean = sumMoney(col("value"), 6) /
       count(lit(1)).cast("double")
     Temporal.resampleLocf(t.events, Seq("user_id"), "ts", "value", day,
         cellAgg = Some(exactMean))

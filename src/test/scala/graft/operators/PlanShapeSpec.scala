@@ -915,4 +915,37 @@ class PlanShapeSpec extends SparkSpec {
     assert(plan.contains("ReusedExchange"),
       s"the totals branch must reuse the pairs exchange:\n$plan")
   }
+
+  test("q02/q03/q12 money sums: no decimal above 18 digits, codegen'd HashAggregate only") {
+    import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.{
+      HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
+    import org.apache.spark.sql.types.DecimalType
+    object walk extends AdaptiveSparkPlanHelper
+    for (name <- Seq("q02_agg_pricing", "q03_region_revenue", "q12_date_parts")) {
+      val df = graft.SparkEntry.queries(name)(spark, sfDir)
+      df.collect() // the final adaptive plan, with its codegen stages
+      val plan = df.queryExecution.executedPlan
+      val aggs = walk.collect(plan) { case a: HashAggregateExec => a }
+      assert(aggs.nonEmpty, s"$name: no HashAggregate in\n$plan")
+      val others = walk.collect(plan) {
+        case a: ObjectHashAggregateExec => a
+        case a: SortAggregateExec => a
+      }
+      assert(others.isEmpty, s"$name: non-hash aggregate in\n$plan")
+      val inCodegen = walk.collect(plan) { case w: WholeStageCodegenExec => w }
+        .flatMap(_.child.collect { case a: HashAggregateExec => a })
+      assert(inCodegen.size == aggs.size, s"$name: a HashAggregate runs outside codegen in\n$plan")
+      for (a <- aggs) {
+        val wide = (a.aggregateExpressions.flatMap(_.aggregateFunction.aggBufferAttributes) ++
+          a.output).map(_.dataType) ++
+          a.aggregateExpressions.flatMap(_.collect { case e => e.dataType })
+        assert(!wide.exists {
+          case d: DecimalType => d.precision > 18
+          case _ => false
+        }, s"$name: a decimal wider than 18 digits in ${a.simpleString(400)}")
+      }
+    }
+  }
 }
