@@ -745,7 +745,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(exprs.length == 4 || exprs.length == 5,
           s"graft_store_topk takes 4-5 arguments, got ${exprs.length}")
         val spark = org.apache.spark.sql.SparkSession.active
-        logical(graft.streaming.StreamingIngest.searchIndexTopK(
+        logical(graft.operators.BatchStore.searchIndexTopK(
           spark, strConst(exprs(0), "index_dir"), strConst(exprs(1), "id_col"),
           graft.operators.TextSearch.searchTermsJvm(strConst(exprs(2), "query")),
           intConst(exprs(3), "k"),
@@ -762,7 +762,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(exprs.length == 4 || exprs.length == 5,
           s"graft_store_bm25 takes 4-5 arguments, got ${exprs.length}")
         val spark = org.apache.spark.sql.SparkSession.active
-        logical(graft.streaming.StreamingIngest.searchIndexTopKBm25(
+        logical(graft.operators.BatchStore.searchIndexTopKBm25(
           spark, strConst(exprs(0), "index_dir"), strConst(exprs(1), "id_col"),
           graft.operators.TextSearch.searchTermsJvm(strConst(exprs(2), "query")),
           intConst(exprs(3), "k"),
@@ -790,7 +790,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           // zero-token docs, no full-store countDistinct per query) —
           // the same sourcing as the sibling store TVFs; a store
           // without a manifest falls back to the store-distinct count
-          nDocs = graft.streaming.StreamingIngest
+          nDocs = graft.operators.BatchStore
             .searchIndexTotals(spark, indexDir).map(_._1),
           maxQueryTerms = exprs.lift(5).map(e => intConst(e, "max_query_terms"))))
       }))

@@ -48,7 +48,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * diverges near surrogate pairs (ς vs σ — found by the TextSearchSpec
   * generator). On that class the OLD chain disagreed with its own
   * query side, so stores keep
-  * [[graft.streaming.StreamingIngest.TokenizerVersion]] v2: no stream
+  * [[graft.operators.BatchStore.TokenizerVersion]] v2: no token stream
   * that both sides agreed on has changed.
   *
   * CodegenFallback is deliberate: the per-row token walk dominates and

@@ -93,10 +93,8 @@ object Boilerplate {
   /** The strip step against an EXTERNALLY-supplied heavy relation
     * (column `unit` = trimmed form, plus `perCol` when scoped) —
     * shared by [[stripRepeatedUnits]] (heavy = this relation's own
-    * doc frequencies) and the streaming screen
-    * ([[graft.streaming.StreamingIngest.boilerplateScreenStream]]),
-    * whose heavy set is the persisted frequency store merged with the
-    * batch's own delta. Same output contract as
+    * doc frequencies) and any caller whose heavy set comes from
+    * elsewhere (a persisted frequency store). Same output contract as
     * [[stripRepeatedUnits]]. */
   def stripUnitsIn(df: DataFrame, idCol: String, unitsCol: Column,
       keptCol: String, heavy: DataFrame, perCol: Option[String] = None,
@@ -325,10 +323,8 @@ object Boilerplate {
   /** The span-strip step against an EXTERNALLY-supplied heavy anchor
     * relation (column `anchor` = the [[anchorRel]] 60-bit window hash)
     * — shared by [[stripRepeatedSpans]] (heavy = this relation's own
-    * anchor frequencies) and the streaming screen
-    * ([[graft.streaming.StreamingIngest.spanScreenStream]]), whose
-    * heavy set is the persisted anchor-frequency store merged with the
-    * batch's own delta. Same output contract as
+    * anchor frequencies) and any caller whose heavy anchors come from
+    * elsewhere (a persisted anchor-frequency store). Same output contract as
     * [[stripRepeatedSpans]]: `n_tokens`, `n_removed`, `keptCol`. */
   def stripSpansIn(df: DataFrame, idCol: String, textCol: String,
       keptCol: String, heavyAnchors: DataFrame, k: Int,

@@ -12,22 +12,20 @@ import org.apache.spark.sql.SparkSession
   * compositions built on them — each documents the construction side
   * effect). The checkpointed blocks pin executor storage until the
   * ContextCleaner happens to collect the dropped references, which in a
-  * long-lived session composing many instances — a streaming curate
-  * loop is exactly that — accumulates storage across batches.
+  * long-lived session composing many instances accumulates storage
+  * across batches.
   *
   * [[scoped]] is the deterministic form of that cleanup: it snapshots
   * the persisted-RDD set, runs the body (which must RUN its actions —
   * returning a lazy plan that still needs the blocks defeats the
-  * point), and unpersists every RDD the body pinned. The streaming
-  * curate loops wrap every micro-batch in it, which is what keeps their
-  * storage flat across an unbounded run (proven in
-  * `StreamingIngestSpec`).
+  * point), and unpersists every RDD the body pinned. `Verify`, `Bench`
+  * and the batch store ([[BatchStore.searchIndexBatch]]) wrap each unit
+  * of work in it, which keeps storage flat across a long run.
   *
   * Concurrency contract: the diff attributes every RDD persisted DURING
   * the body to the body. Jobs racing on the same session from other
   * threads could have their blocks released — scope one logical task at
-  * a time (the foreachBatch serialization already guarantees this for
-  * the streaming loops).
+  * a time.
   */
 object Checkpoints {
 

@@ -256,7 +256,7 @@ object Dedup {
   }
 
   /** (band, band_key) structs over a signature array column — shared by
-    * the batch self-join and the streaming index/probe pair; both sides
+    * the batch self-join and the index/probe pair; both sides
     * of any LSH join MUST build keys from this one definition. */
   private def bandKeyStructs(sig: Column, k: Int, bands: Int): Seq[Column] = {
     val r = k / bands
@@ -276,13 +276,11 @@ object Dedup {
   /** The LSH index of a corpus: one row per (band, band_key) per doc,
     * carrying the full signature for agreement rerank. This is the
     * relation a pipeline PERSISTS (parquet, partitioned by band) so
-    * later batches — or a stream
-    * ([[graft.streaming.StreamingIngest.nearDupScreenStream]]) — can
-    * probe the corpus without recomputing it.
+    * later batches can probe the corpus without recomputing it.
     *
     * The index is SELF-DESCRIBING: `ix_n`/`ix_k`/`ix_bands` ride along
     * as constant columns (free under parquet dictionary encoding) and
-    * [[minhashProbe]] / the streaming screen validate them against the
+    * [[minhashProbe]] validates them against the
     * probe's parameters — a mismatched probe RAISES instead of silently
     * equi-joining into the wrong band-key space and returning
     * near-empty matches (see [[IndexStamp]]). */
@@ -310,8 +308,7 @@ object Dedup {
 
   /** `index` validated against the probe-side build parameters — any
     * index row stamped differently raises; an unstamped relation is
-    * rejected at plan construction. Shared by [[minhashProbe]] and
-    * [[graft.streaming.StreamingIngest.nearDupScreenStream]]. */
+    * rejected at plan construction. Used by [[minhashProbe]]. */
   private[graft] def validatedMinhashIndex(index: DataFrame, n: Int, k: Int,
       bands: Int, what: String): DataFrame =
     IndexStamp.validated(index, minhashStampParams(n, k, bands), what)
@@ -373,8 +370,7 @@ object Dedup {
 
   /** Probe an LSH index ([[minhashIndex]]) with new docs: per probe doc,
     * every index doc sharing a band key, reranked by exact signature
-    * agreement. The batch form of streaming near-dup screening — and its
-    * correctness oracle. Emits one row per (probe, match) pair.
+    * agreement. Emits one row per (probe, match) pair.
     *
     * `n`/`k`/`bands` are validated against the index's stamp
     * ([[IndexStamp]]): a mismatch RAISES rather than returning the
@@ -399,7 +395,7 @@ object Dedup {
     * mismatch. `minAgree` stays caller-side (a probe-time threshold,
     * not a build parameter). An empty index returns the empty match
     * set with the contract schema. Prefer this for persisted indexes;
-    * the explicit form remains for streaming plans. */
+    * the explicit form remains for plans built before any action. */
   def minhashProbeAuto(probes: DataFrame, index: DataFrame, idCol: String,
       textCol: String, minAgree: Int = 8,
       maxBucketRows: Option[Int] = None): DataFrame =
@@ -433,9 +429,8 @@ object Dedup {
     }
 
   /** Band-key equi-join of a probe index against a corpus index with
-    * agreement rerank — shared by [[minhashProbe]] and the streaming
-    * screen (which must skip the stateful `distinct`). Columns are bound
-    * BY NAME, never positionally: the index side is caller-supplied and
+    * agreement rerank, before [[minhashProbe]]'s `distinct`. Columns
+    * are bound BY NAME, never positionally: the index side is caller-supplied and
     * a parquet round-trip with `partitionBy("band")` reorders its columns
     * (partition columns read back last) — a positional rename would
     * silently relabel band_key as band and empty every probe result. */

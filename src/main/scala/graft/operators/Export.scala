@@ -335,8 +335,8 @@ object Export {
     *
     * The published export is stamped `placement=assigned` (a
     * `_placement` manifest sidecar): the hash-append family
-    * ([[appendShards]], [[reshardExport]], the streaming export sink)
-    * refuses it, because hash-placing new rows into a caller-assigned
+    * ([[appendShards]], [[reshardExport]]) refuses it, because
+    * hash-placing new rows into a caller-assigned
     * layout would silently mix two placement contracts in one
     * directory — re-balance with [[rebalanceExport]] instead.
     * ([[shardedWrite]] stamps `hash` through the private `placement`
@@ -465,8 +465,8 @@ object Export {
     *
     * Mechanically it is one `_schema` sidecar update riding the same
     * crash-safe manifest swap as every manifest advance
-    * ([[publishManifest]] with a schema override; `_placement` and the
-    * streaming `_batch` marker are carried). After it: old files read
+    * ([[publishManifest]] with a schema override; `_placement` is
+    * carried). After it: old files read
     * with nulls in the new columns, the gate requires appended batches
     * to CARRY the new columns, and [[verifyShards]] stays green across
     * the boundary (manifest checksums are over `checksumCols`, which
@@ -491,10 +491,9 @@ object Export {
           "existing column needs a re-export (shardedWrite)")
     }
     val evolved = org.apache.spark.sql.types.StructType(old.fields ++ addCols)
-    // same manifest rows, new _schema — and the _batch marker survives
-    // (dropping it would let a streaming replay re-merge its batch)
+    // same manifest rows, new _schema
     publishManifest(spark, dir, readManifest(spark, dir),
-      batchId = manifestBatch(spark, dir), schemaOverride = Some(evolved))
+      schemaOverride = Some(evolved))
     evolved
   }
 
@@ -536,7 +535,7 @@ object Export {
       dir, placement)
   }
 
-  /** Slurp a small control file (`_schema`, `_batch`, `_merged_into`)
+  /** Slurp a small control file (`_schema`, `_merged_into`)
     * to a string; None when absent. */
   private def readSmallFile(fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): Option[String] = {
@@ -597,8 +596,8 @@ object Export {
   }
 
   /** Refuse hash-placement operations against an export stamped
-    * `assigned`: [[appendShards]], [[reshardExport]] and the streaming
-    * export sink all RECOMPUTE `h60(id) % nShards`, which is simply
+    * `assigned`: [[appendShards]] and [[reshardExport]] both
+    * RECOMPUTE `h60(id) % nShards`, which is simply
     * not where an assigned layout put (or would put) its rows — one
     * such append and the directory holds two placement contracts,
     * token balance erodes unobserved, and any consumer recomputing a
@@ -706,9 +705,9 @@ object Export {
   /** [[verifyShards]] restricted to a shard SUBSET — the rotation unit
     * for an export too large to re-attest whole: the scan partition-
     * prunes to the listed `shard=K` directories, so one check costs
-    * O(those shards), and a schedule that rotates the subset (the
-    * streaming sink's `verifyShardsPerCheck`) attests every byte of the
-    * export once per nShards/k checks without any single check scanning
+    * O(those shards), and a schedule that rotates the subset attests
+    * every byte of the export once per nShards/k checks without any
+    * single check scanning
     * the corpus. Shards outside the subset are simply not checked this
     * call — the caller owns the rotation's coverage. Raises on
     * divergence within the subset; returns the subset compare. */
@@ -766,8 +765,9 @@ object Export {
 
   /** Rewrite an append-grown export into ~one ord-sorted file per
     * `targetRowsPerFile` rows and swap it in — the export twin of
-    * [[IndexOps.compactSwap]], closing the same small-files growth the
-    * streaming sink accumulates (one file per shard per batch). The
+    * [[IndexOps.compactSwap]], closing the same small-files growth
+    * repeated [[appendShards]] calls accumulate (one file per shard per
+    * batch). The
     * compacted copy is proven CONTENT-IDENTICAL BEFORE the swap: the
     * per-shard manifest of the rewritten bytes is recomputed and
     * compared against the live manifest — compaction must be invisible
@@ -778,8 +778,8 @@ object Export {
     * empty-safe contract of the rest of the family). Crash-safe like
     * every swap here: the tmp copy is disposable until the swap
     * starts, `.old` is authoritative until it completes
-    * ([[IndexOps.recoverSwap]] at the streaming sink's batch entry and
-    * [[appendShards]]' entry). Returns the row count. */
+    * ([[IndexOps.recoverSwap]] at [[appendShards]]' entry). Returns
+    * the row count. */
   def compactExport(spark: SparkSession, dir: String,
       checksumCols: Seq[String],
       targetRowsPerFile: Long = 4L * 1000 * 1000): Long = {
@@ -840,8 +840,7 @@ object Export {
       checksumCols: Seq[String], dir: String): DataFrame = {
     // a crash inside a previous append's manifest swap (or a
     // compactExport run) leaves a live dir renamed away; finish or
-    // roll back BEFORE the first read — the batch twin of the
-    // streaming sink's batch-entry recovery
+    // roll back BEFORE the first read
     recoverDelete(spark, dir)
     requireHashPlacement(spark, dir, "appendShards")
     val old = manifestRows(spark, dir)
@@ -956,15 +955,9 @@ object Export {
   }
 
   /** Write `manifest` to a tmp dir and swap it over `dir/manifest`:
-    * readers see the old manifest or the new one, never a torn one.
-    * With `batchId`, the new manifest generation records which
-    * streaming batch produced it (`_batch` sidecar file inside the
-    * manifest dir — underscore-prefixed, invisible to the parquet
-    * reader), which is what makes a streaming replay's manifest
-    * advance IDEMPOTENT: a merge is skipped when the live manifest
-    * already records the replaying batch. */
+    * readers see the old manifest or the new one, never a torn one. */
   private[graft] def publishManifest(spark: SparkSession, dir: String,
-      manifest: DataFrame, batchId: Option[Long] = None,
+      manifest: DataFrame,
       schemaOverride: Option[org.apache.spark.sql.types.StructType] = None): Unit = {
     val tmp = manifestDir(dir) + ".new"
     val (fs, _) = fsPath(spark, dir)
@@ -991,10 +984,6 @@ object Export {
       case None => carry(schemaPath(manifestDir(dir)), schemaPath(tmp))
     }
     carry(placementPath(manifestDir(dir)), placementPath(tmp))
-    batchId.foreach { b =>
-      val out = fs.create(new org.apache.hadoop.fs.Path(tmp, "_batch"), true)
-      out.write(b.toString.getBytes("UTF-8")); out.close()
-    }
     IndexOps.recoverSwap(spark, manifestDir(dir))
     // a manifest dir deleted by operator error (the repairManifest
     // entry path) has nothing to swap out — plain rename publishes
@@ -1005,14 +994,6 @@ object Export {
         s"publishManifest: rename $tmp -> $mPath failed")
       spark.catalog.refreshByPath(manifestDir(dir))
     }
-  }
-
-  /** The streaming batch id the live manifest generation records, if
-    * any (None for manifests written by the batch entry points). */
-  private[graft] def manifestBatch(spark: SparkSession, dir: String): Option[Long] = {
-    val (fs, _) = fsPath(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(manifestDir(dir), "_batch")
-    readSmallFile(fs, p).map(_.trim.toLong)
   }
 
   /** Combine published exports into one WITHOUT reading a data byte:
@@ -1315,7 +1296,7 @@ object Export {
 
   /** [[rebalanceExport]] into a NEW directory, leaving `src` untouched
     * — the balanced SNAPSHOT of a continuously-growing hash export.
-    * The streaming sink and [[appendShards]] refuse assigned layouts
+    * [[appendShards]] refuses assigned layouts
     * (placement stamp), so "a live hash export that keeps ingesting
     * PLUS a token-balanced view for the trainer" is exactly this:
     * appends keep landing in `src` under the portable h60 contract,
@@ -1477,8 +1458,8 @@ object Export {
     * landed new files there FIRST, a later recovery would read the
     * recreated dir as "swap completed" and wipe the parked original —
     * losing every pre-delete row of that shard. With every writer
-    * ([[appendShards]], the streaming sink, [[compactExport]], the
-    * rewrite family) healing delete residue before touching data, that
+    * ([[appendShards]], [[compactExport]], the rewrite family) healing
+    * delete residue before touching data, that
     * sequence cannot happen. Read paths deliberately do NOT heal — a
     * half-swapped shard reads as missing rows, which [[verifyShards]]
     * calls out loudly, and a reader must not mutate. */

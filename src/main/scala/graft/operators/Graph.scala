@@ -24,8 +24,10 @@ import org.apache.spark.sql.functions._
   *    algorithms).
   *  - Each iteration shares `rank div out_deg` on the node-sized degree
   *    relation, joins it onto the edge blocks (pinned shuffled-hash —
-  *    sort-free, zero edge exchanges per round) and aggregates keyed
-  *    dst. Nothing is driver-side; rank state never leaves the cluster.
+  *    sort-free) and aggregates keyed dst. The checkpoint reads back
+  *    with unknown partitioning, so each round still exchanges the
+  *    edge body once. Nothing is driver-side; rank state never leaves
+  *    the cluster.
   *  - Iteration count is FIXED (power iteration converges geometrically;
   *    fixed-k is the published practice for rank features), so the
   *    whole computation is a static plan chain — no convergence count()
@@ -103,13 +105,15 @@ object Graph {
     * against the r15 eDeg form it replaces — OPTIMIZATION_r18.md):
     *
     *  - ONE materialization of the caller's edge plan, REPARTITIONED BY
-    *    src first: the 2-column edge body crosses the wire once, and
-    *    LogicalRDD preserves outputPartitioning, so degrees (groupBy
-    *    src), every round's contribution join (on src) and the
-    *    iteration reads all land on the same partitioning with ZERO
-    *    further edge exchanges. The r15 form checkpointed the edge body
-    *    TWICE (raw + a 3-column edge⋈degree join) — the join and the
-    *    second, wider materialization are gone.
+    *    src first, whatever the caller's plan is (an input that is
+    *    already a src-partitioned checkpoint is repartitioned again:
+    *    under AQE a checkpoint reads back with unknown partitioning, so
+    *    no check on the input could ever skip it). The checkpoint does
+    *    not carry its partitioning either, so degrees and every round's
+    *    contribution join still exchange the edge body. The r15 form
+    *    checkpointed the edge body TWICE (raw + a 3-column edge⋈degree
+    *    join) — the join and the second, wider materialization are
+    *    gone.
     *  - `rank div out_deg` moves off the edge rows onto the NODE-sized
     *    degree relation ([[prRound]]): per round the edge body is only
     *    streamed through one hash probe + map-side combine, not widened
@@ -119,53 +123,12 @@ object Graph {
     *    sides, 2× the rows through the distinct exchange).
     */
   private def prIterationRelations(e0: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val e = srcPartitionedCheckpoint(e0)
+    val e = e0.repartition(col("src")).localCheckpoint(true)
     val deg = outDegrees(e).localCheckpoint(true)
     val nodes = deg.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct().localCheckpoint(true)
     (e, deg, nodes)
-  }
-
-  /** The [[materialized]] guard, partitioning-aware: a caller that
-    * already holds the edge relation as src-hash-partitioned
-    * checkpointed blocks (q175's query shares one graph between seed
-    * selection and the rank loop) must not pay a SECOND edge-body
-    * shuffle + materialization here. Anything else — lazy plans,
-    * checkpoints on other partitionings — goes through the full
-    * repartition(src) + checkpoint. */
-  private def srcPartitionedCheckpoint(df: DataFrame): DataFrame =
-    if (srcPartitionedMaterialized(df)) df
-    else df.repartition(col("src")).localCheckpoint(true)
-
-  /** True when `df` already IS checkpointed blocks hash-partitioned on
-    * its own first ("src") column. SEMANTIC comparison, not a name
-    * match (r19, advisor finding): the partitioning expression must be
-    * the scan's own output attribute — same exprId — so an unrelated
-    * attribute that happens to be named "src" can never satisfy it,
-    * and the check is robust to however the optimizer renders the
-    * caller's rename (GraphSpec pins that q175's
-    * repartition+checkpoint shape is detected THROUGH asEdges' toDF).
-    * Failure mode stays benign by construction: a miss costs one
-    * redundant edge shuffle+checkpoint, never wrongness. */
-  private[graft] def srcPartitionedMaterialized(df: DataFrame): Boolean = {
-    import org.apache.spark.sql.catalyst.expressions.AttributeReference
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    import org.apache.spark.sql.execution.RDDScanExec
-    df.queryExecution.executedPlan match {
-      case r: RDDScanExec =>
-        val srcAttr = r.output.headOption.collect {
-          case a: AttributeReference if a.name == "src" => a
-        }
-        r.outputPartitioning match {
-          case h: HashPartitioning => h.expressions match {
-            case Seq(a: AttributeReference) => srcAttr.exists(a.semanticEquals)
-            case _ => false
-          }
-          case _ => false
-        }
-      case _ => false
-    }
   }
 
   /** One integer power-iteration round:

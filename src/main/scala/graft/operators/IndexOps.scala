@@ -9,10 +9,8 @@ import org.apache.spark.sql.functions._
   * extend: compaction and skew profiling.
   *
   * Both exist because the indexes are append-GROWN: every
-  * [[Dedup.minhashIndexExtend]] / [[Similarity.lshIndexExtend]] batch —
-  * and every micro-batch of the streaming curate loops
-  * ([[graft.streaming.StreamingIngest.curateIngestStream]]) — adds one
-  * more small parquet file per partition directory. At 100 TB that is
+  * [[Dedup.minhashIndexExtend]] / [[Similarity.lshIndexExtend]] batch
+  * adds one more small parquet file per partition directory. At 100 TB that is
   * the classic object-store small-files failure mode (probe-side scan
   * cost becomes per-FILE, not per-byte: open/footer/seek per fragment),
   * and bucket skew is the probe-side cost model (a probe's candidate
@@ -239,8 +237,8 @@ object IndexOps {
   /** Swap `freshDir` into `liveDir`'s place: live → live.old, fresh →
     * live, delete live.old. NOT atomic across the two renames — run
     * [[recoverSwap]] before reading `liveDir` in any process that may
-    * have crashed mid-swap (the streaming curate loops do, every
-    * batch); each individual rename is atomic on HDFS-like stores.
+    * have crashed mid-swap (the batch stores do, every batch); each
+    * individual rename is atomic on HDFS-like stores.
     * On a pure object store without atomic rename, point the caller at
     * a catalog/pointer flip instead. */
   private[graft] def swapDirs(spark: SparkSession, liveDir: String,
@@ -322,16 +320,9 @@ object IndexOps {
     * ignored; an all-absent list is a no-op; a list covering the WHOLE
     * index is refused (delete the directory and rebuild later instead
     * of swapping in an empty relation no probe can use).
-    *
-    * The streaming loops' id SIDECAR is deliberately NOT touched: its
-    * rows are (id, batch_id) TOMBSTONES carrying no content, and they
-    * are exactly what keeps a replayed batch from RE-ADMITTING a
-    * deleted document — removing them would turn an exactly-once
-    * replay into a resurrection path. Content goes; the tombstone
-    * stays. Takedowns on a LIVE stream follow the same quiesce rule as
-    * every other maintenance swap here (the loops recover a crashed
-    * swap at batch entry, but a delete racing an in-flight extend
-    * could drop the extend's files with the `.old` generation). */
+    * Takedowns follow the same quiesce rule as every other maintenance
+    * swap here: a delete racing an in-flight extend could drop the
+    * extend's files with the `.old` generation. */
   def deleteSwap(spark: SparkSession, dir: String, dirCol: String,
       clusterCols: Seq[String], idCol: String, ids: DataFrame,
       targetRowsPerFile: Long = 4L * 1000 * 1000): Long = {
@@ -362,16 +353,6 @@ object IndexOps {
     swapDirs(spark, dir, tmpDir)
     dstRows
   }
-
-  /** [[deleteSwap]] with the [[Dedup.minhashIndex]] layout. */
-  def deleteSwapMinhash(spark: SparkSession, dir: String, idCol: String,
-      ids: DataFrame): Long =
-    deleteSwap(spark, dir, "band", Seq("band_key"), idCol, ids)
-
-  /** [[deleteSwap]] with the [[Similarity.lshIndex]] layout. */
-  def deleteSwapLsh(spark: SparkSession, dir: String, idCol: String,
-      ids: DataFrame): Long =
-    deleteSwap(spark, dir, "tbl", Seq("bucket"), idCol, ids)
 
   /** [[deleteSwap]] for the IVF layout, with the centroid rule: when a
     * listed id anchored a CENTROID (`is_cent`), the centroid vector
@@ -442,11 +423,6 @@ object IndexOps {
     deleteSwap(spark, dir, "cell", Seq(idCol), idCol, ids)
   }
 
-  /** [[compactSwap]] with the [[Dedup.minhashIndex]] layout. */
-  def compactSwapMinhash(spark: SparkSession, dir: String,
-      targetRowsPerFile: Long = 4L * 1000 * 1000): Long =
-    compactSwap(spark, dir, "band", Seq("band_key"), targetRowsPerFile)
-
   /** Re-CLUSTER a persisted IVF index in place: fresh hash-ordered
     * centroids sampled from the CURRENT member set, every vector
     * re-assigned — the REPAIR for the drift [[cellHistogram]] detects.
@@ -488,27 +464,10 @@ object IndexOps {
     srcRows
   }
 
-  /** [[compactSwap]] with the [[Similarity.lshIndex]] layout. */
-  def compactSwapLsh(spark: SparkSession, dir: String,
-      targetRowsPerFile: Long = 4L * 1000 * 1000): Long =
-    compactSwap(spark, dir, "tbl", Seq("bucket"), targetRowsPerFile)
-
   /** [[compactSwap]] with the [[Similarity.ivfIndex]] layout:
     * partitioned by cell, in-cell clustered by id so the rewritten
     * files carry id min/max stats for range pruning. */
   def compactSwapIvf(spark: SparkSession, dir: String, idCol: String,
-      targetRowsPerFile: Long = 4L * 1000 * 1000): Long =
-    compactSwap(spark, dir, "cell", Seq(idCol), targetRowsPerFile)
-
-  /** [[compactSwap]] with the [[Pq.pqIndex]] layout — same cell
-    * directories and in-cell id clustering as the raw IVF form (the PQ
-    * index IS the IVF layout storing codes), so an extend-grown IVF-PQ
-    * index gets the same small-files repair as the other three
-    * families. The stamp-uniqueness gate inside [[compactTo]] covers
-    * the pq_* columns too: a directory holding appends encoded under a
-    * DIFFERENT codebook (same shape, different `pq_cb`) refuses
-    * compaction instead of fusing two code spaces. */
-  def compactSwapPq(spark: SparkSession, dir: String, idCol: String,
       targetRowsPerFile: Long = 4L * 1000 * 1000): Long =
     compactSwap(spark, dir, "cell", Seq(idCol), targetRowsPerFile)
 }

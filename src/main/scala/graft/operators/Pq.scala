@@ -680,8 +680,8 @@ object Pq {
       checksumCols: Seq[String], iters: Int = 0, sampleN: Int = 8192,
       failAfterStep: Int = Int.MaxValue): Option[DataFrame] = {
     // failAfterStep is PqSpec's crash seam (1 = after the index half,
-    // before the export delete), the streaming loops' established
-    // test-seam pattern; production passes nothing and never throws
+    // before the export delete), the batch stores' test-seam
+    // pattern; production passes nothing and never throws
     def failpoint(n: Int): Unit = if (failAfterStep == n)
       throw new IllegalStateException(s"pqTakedown: test failpoint after step $n")
     IndexOps.recoverSwap(spark, indexDir)

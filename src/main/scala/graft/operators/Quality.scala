@@ -19,9 +19,7 @@ object Quality {
   /** Per-gate violation-count aggregates, `totalName` first. count(when),
     * not sum(when): sum over ZERO rows is null, and an empty input must
     * report 0 violations (as the oracle's COUNT(*) FILTER does), not
-    * null — same discipline in [[profile]]. Shared by [[audit]] and the
-    * streaming twin ([[graft.streaming.StreamingIngest.observedGates]])
-    * so the two can never diverge. */
+    * null — same discipline in [[profile]]. Used by [[audit]]. */
   def gateCountExprs(gates: Seq[Gate], totalName: String): Seq[Column] = {
     require(gates.map(_.name).distinct.length == gates.length,
       "gate names must be unique")

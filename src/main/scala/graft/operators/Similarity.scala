@@ -169,9 +169,8 @@ object Similarity {
   /** The persistable LSH index of an embedding corpus: one row per
     * (table, bucket) per vector, carrying the vector and its norm for
     * exact cosine rerank — the relation a pipeline WRITES (parquet,
-    * `partitionBy("tbl")`) so later batches or a stream
-    * ([[graft.streaming.StreamingIngest.embeddingScreenStream]]) can
-    * probe the corpus without recomputing it. The embedding twin of
+    * `partitionBy("tbl")`) so later batches can probe the corpus
+    * without recomputing it. The embedding twin of
     * [[Dedup.minhashIndex]].
     *
     * The plane count is FIXED at index-build time by definition (a
@@ -182,7 +181,7 @@ object Similarity {
     *
     * The index is SELF-DESCRIBING: `ix_planes`/`ix_dims`/`ix_tables`
     * ride along as constant columns (free under parquet dictionary
-    * encoding) and [[lshIndexProbe]] / the streaming screen validate
+    * encoding) and [[lshIndexProbe]] validates
     * them against the probe's parameters — a mismatched probe RAISES
     * instead of silently equi-joining into the wrong bucket space and
     * returning near-empty matches (see [[IndexStamp]]). */
@@ -208,16 +207,14 @@ object Similarity {
 
   /** `index` validated against the probe-side build parameters — any
     * index row stamped differently raises; an unstamped relation is
-    * rejected at plan construction. Shared by [[lshIndexProbe]] and
-    * [[graft.streaming.StreamingIngest.embeddingScreenStream]]. */
+    * rejected at plan construction. Used by [[lshIndexProbe]]. */
   private[graft] def validatedLshIndex(index: DataFrame, planes: Int,
       dims: Int, tables: Int, what: String): DataFrame =
     IndexStamp.validated(index, lshStampParams(planes, dims, tables), what)
 
   /** Bucket-join of a probe-side index against a corpus index with exact
-    * cosine rerank — shared by [[lshIndexProbe]] and the streaming
-    * screen (which must skip the stateful `distinct`). Columns bind BY
-    * NAME: a parquet round-trip with `partitionBy("tbl")` reorders the
+    * cosine rerank, before [[lshIndexProbe]]'s `distinct`. Columns
+    * bind BY NAME: a parquet round-trip with `partitionBy("tbl")` reorders the
     * corpus side's columns (partition columns read back last), so a
     * positional rename would silently mislabel them (the same lesson as
     * [[Dedup.probeJoin]]). */
@@ -237,8 +234,7 @@ object Similarity {
 
   /** Probe an LSH index ([[lshIndex]]) with new vectors: per probe, every
     * corpus vector sharing a bucket in any table, exact-cosine-reranked
-    * at `minMicro`. The batch form of streaming embedding screening —
-    * and its correctness oracle. One row per (probe, match) pair.
+    * at `minMicro`. One row per (probe, match) pair.
     *
     * `planes`/`dims`/`tables` are validated against the index's stamp
     * ([[IndexStamp]]): a mismatch RAISES rather than returning the
@@ -264,9 +260,8 @@ object Similarity {
     * self-describing-index contract: the caller CANNOT mismatch,
     * because there is nothing to re-supply. An empty index returns the
     * empty match set with the contract schema. Prefer this for
-    * persisted indexes; the explicit-parameter form remains for
-    * streaming plans (building the probe side needs the parameters
-    * before any action may run). */
+    * persisted indexes; the explicit-parameter form remains for plans
+    * that must be built before any action may run. */
   def lshIndexProbeAuto(probes: DataFrame, index: DataFrame, idCol: String,
       vecCol: String, minMicro: Long,
       maxBucketRows: Option[Int] = None): DataFrame =

@@ -9,9 +9,8 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, T
   * join, and interval-overlap join.
   *
   * The reference's event-time processing is the pandas as-of pattern
-  * (latest anchor per key at or before each row's time); the streaming
-  * twin lives in [[graft.streaming.StreamingIngest.asOfStream]]. These
-  * are the batch forms, built so that none of them ever expands to a
+  * (latest anchor per key at or before each row's time). These are
+  * batch forms, built so that none of them ever expands to a
   * per-key cross product:
   *
   *  - [[asOfJoin]] is ONE shuffle (union both sides, hash-partition by
@@ -79,8 +78,7 @@ object Temporal {
     * Determinism: among right rows with identical event time, the
     * greatest `tieBreak` tuple wins in every direction (pass a unique
     * column, e.g. the event id). `toleranceMicros` nulls out matches
-    * farther than the given horizon — the batch twin of
-    * [[graft.streaming.StreamingIngest.asOfStreamTtl]]'s TTL.
+    * farther than the given horizon.
     *
     * At 100 TB: cost is a shuffle of |L|+|R| rows on `keys` plus a
     * per-key sort — the same shape as any windowed aggregation; a hot

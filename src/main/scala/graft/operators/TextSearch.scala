@@ -429,17 +429,17 @@ object TextSearch {
   }
 
   /** Top-k search against a PERSISTED postings store (the relation
-    * [[postings]] writes, or the streaming store
-    * [[graft.streaming.StreamingIngest.searchIndexIngestStream]]
-    * maintains — extra columns like `batch_id` are ignored): same
+    * [[postings]] writes, or the batch store
+    * [[BatchStore.searchIndexBatch]] maintains — extra columns like
+    * `batch_id` are ignored): same
     * scoring, match-count semantics (`minShouldMatch`, default
     * conjunctive), tiebreak and heap top-k as [[searchTopK]].
     * `nDocs` defaults to the store's distinct indexed-document count
     * (one skinny distinct over the store — pass the corpus count
     * explicitly to match [[searchTopK]] when zero-token documents
-    * exist: they never enter a postings store; the streaming loop's
+    * exist: they never enter a postings store; the batch store's
     * doc-length sidecar carries the corpus-exact count, see
-    * [[graft.streaming.StreamingIngest.searchIndexDocLengths]]).
+    * [[BatchStore.searchIndexDocLengths]]).
     *
     * Scale: the term filter prunes FIRST (on a term-partitioned store,
     * partition pruning — postings never re-derive from text), the
@@ -487,8 +487,8 @@ object TextSearch {
     * at compaction time: the doc-length sidecar every BM25 index
     * keeps). `totals` = `(n_docs, Σdl)` turns the normalization
     * scalars into LITERALS (the identical `(Σdl·1000) div n` floor
-    * arithmetic) — the streaming loops' totals manifest supplies it
-    * ([[graft.streaming.StreamingIngest.searchIndexTotals]]); without
+    * arithmetic) — the batch store's totals manifest supplies it
+    * ([[BatchStore.searchIndexTotals]]); without
     * it the scalars cost one count/sum job over `dl` per query. */
   def searchStoreTopKBm25(store: DataFrame, idCol: String,
       terms: Seq[String], k: Int,

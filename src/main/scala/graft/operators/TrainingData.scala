@@ -573,8 +573,8 @@ object TrainingData {
   // ------------------------------------------------- incremental curation
 
   /** The per-batch step of incremental corpus curation — the reusable
-    * core of q72 and the foreachBatch body of its streaming twin:
-    * caller-policy quality `gate` → in-batch exact dedup → exact-content
+    * core of q72: caller-policy quality `gate` → in-batch exact dedup →
+    * exact-content
     * screen against the store's hashes → stamped-index near-dup screen
     * with intra-batch collapse
     * ([[graft.operators.Dedup.minhashIncrementalIngest]]).

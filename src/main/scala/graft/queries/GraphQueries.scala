@@ -107,11 +107,8 @@ object GraphQueries {
     * co-occurrence graph, oracle-unrolled with the seed-only floor;
     * nodes unreachable from any seed verify at exactly 0. */
   val q175PprSeeded: Q = (spark, dir) => {
-    // src-partitioned checkpoint: the rank loop's iteration relation
-    // wants exactly this layout (Graph.srcPartitionedCheckpoint), so
-    // sharing it here means seed selection AND the loop read ONE edge
-    // materialization instead of two (r18; the plain checkpoint cost a
-    // second full edge-body shuffle + copy inside the operator)
+    // one edge materialization shared by seed selection and the rank
+    // loop (the operator still repartitions it on src itself)
     val g = coEdges(spark, dir, minCount = 1L)
       .repartition(col("src")).localCheckpoint(true)
     Graph.pageRankPersonalized(g,

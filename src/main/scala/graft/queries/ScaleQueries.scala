@@ -96,9 +96,8 @@ object ScaleQueries {
   }
 
   /** DD6 — MinHash index probe: new docs (doc_id % 10 = 0) screened
-    * against the LSH index of the remaining corpus — the batch twin of
-    * [[graft.streaming.StreamingIngest.nearDupScreenStream]] and the
-    * ingest-time "is this a near-dup of the training corpus" gate. */
+    * against the LSH index of the remaining corpus — the ingest-time
+    * "is this a near-dup of the training corpus" gate. */
   val q65MinhashProbe: Q = (spark, dir) => {
     val t = Tables(spark, dir)
     val probes = t.documents.filter(col("doc_id") % 10 === 0)
@@ -469,16 +468,16 @@ object ScaleQueries {
       .orderBy("event_type", "idx")
   }
 
-  /** SK7 — STREAMED sketch-rollup store
-    * ([[graft.streaming.StreamingIngest.sketchRollupBatch]]): the
-    * events stream ingested as two committed micro-batches, each
+  /** SK7 — BATCH-APPENDED sketch-rollup store
+    * ([[graft.operators.BatchStore.sketchRollupBatch]]): the
+    * events table ingested as two committed batches, each
     * appending one (event_type, hll, cms, n_rows) row per group under
     * the committed-batch protocol, then the WHOLE history answered
     * from the store fold alone (`sketchRollupTotals` — HLL register
     * max, CMS counter sum, exact unions): per-type distinct-user
     * registers, a frequency probe for user 7, and the row count. The
     * oracle computes everything DIRECTLY from raw rows — sketch
-    * mergeability is what makes "stream of batches" ≡ "one batch" an
+    * mergeability is what makes "sequence of batches" ≡ "one batch" an
     * exact law, and this query pins protocol + marker + reader
     * end-to-end. */
   val q184SketchStream: Q = (spark, dir) => {
@@ -487,13 +486,13 @@ object ScaleQueries {
       .filter(col("event_type").isNotNull)
       .select(col("event_id"), col("event_type"),
         Hashing.h60(col("user_id").cast("string")).as("h"))
-    graft.streaming.StreamingIngest.sketchRollupBatch(
+    graft.operators.BatchStore.sketchRollupBatch(
       src.filter(col("event_id") % 2 === 0), 0L, store, "event_type", "h",
       hllP = 6, cmsDepth = 4, cmsWidth = 512)
-    graft.streaming.StreamingIngest.sketchRollupBatch(
+    graft.operators.BatchStore.sketchRollupBatch(
       src.filter(col("event_id") % 2 === 1), 1L, store, "event_type", "h",
       hllP = 6, cmsDepth = 4, cmsWidth = 512)
-    val totals = graft.streaming.StreamingIngest.sketchRollupTotals(
+    val totals = graft.operators.BatchStore.sketchRollupTotals(
       spark, store, "event_type")
     totals.select(col("event_type"), col("n_rows"),
         graft.operators.Sketch.cmsQuery(col("cms"),
@@ -516,9 +515,7 @@ object ScaleQueries {
   /** SS7 — embedding index probe: new vectors (vec_id % 10 = 0) screened
     * against the LSH index of the remaining corpus, plane count derived
     * from the CORPUS size at build time (as a real index build would —
-    * a persisted index's bucketing is fixed until rebuilt). The batch
-    * twin of
-    * [[graft.streaming.StreamingIngest.embeddingScreenStream]] and the
+    * a persisted index's bucketing is fixed until rebuilt). The
     * embedding counterpart of q65's MinHash probe: candidate generation
     * is an equi-join on (tbl, bucket) against the index relation a
     * pipeline would persist partitioned by `tbl`. */
@@ -602,8 +599,8 @@ object ScaleQueries {
   /** DD8 — exact bucket-skew profile of the MinHash index over the
     * whole corpus ([[graft.operators.IndexOps.bucketHistogram]]): per
     * band, how many band-key buckets hold exactly `bucket_rows` docs.
-    * The probe-latency model of every index consumer (q65, q70, the
-    * streaming screens): a probe's candidate set is the size of the
+    * The probe-latency model of every index consumer (q65, q70): a
+    * probe's candidate set is the size of the
     * buckets it lands in, so this histogram's tail bounds the worst
     * probe. Two hash aggregations, no window, no collect. */
   val q73MinhashIndexSkew: Q = (spark, dir) => {

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.TextSearch
+import graft.operators.{BatchStore, TextSearch}
 import graft.queries.ParityQueries.Q
 
 /** Ranked keyword-retrieval queries over the `documents` corpus —
@@ -129,9 +129,9 @@ object SearchQueries {
   }
 
   /** SR8 — store-BM25 over a PERSISTED index directory: the corpus is
-    * ingested as two committed micro-batches (doc_id parity split),
+    * ingested as two committed batches (doc_id parity split),
     * compacted (postings + doc-length sidecar fold to batch_id −1),
-    * and searched through [[StreamingIngest.searchIndexTopKBm25]] —
+    * and searched through [[BatchStore.searchIndexTopKBm25]] —
     * doc lengths and n_docs/avgdl come from the SIDECAR (document-
     * count-sized), never a full-store aggregation (PlanShapeSpec pins
     * the absence of the store-wide Σtf node). The oracle replays the
@@ -140,13 +140,13 @@ object SearchQueries {
     val ix = perProcessIndexDir(dir)
     val t = Tables(spark, dir)
     val docs = t.documents.select("doc_id", "text")
-    graft.streaming.StreamingIngest.searchIndexBatch(
+    BatchStore.searchIndexBatch(
       docs.filter(col("doc_id") % 2 === 0), 0L, ix, "doc_id", "text",
       compactAtFiles = 0)
-    graft.streaming.StreamingIngest.searchIndexBatch(
+    BatchStore.searchIndexBatch(
       docs.filter(col("doc_id") % 2 === 1), 1L, ix, "doc_id", "text",
       compactAtFiles = 2)
-    graft.streaming.StreamingIngest.searchIndexTopKBm25(
+    BatchStore.searchIndexTopKBm25(
       spark, ix, "doc_id", QueryTerms, TopK,
       minShouldMatch = Some(MsmAtLeast))
   }
@@ -175,9 +175,9 @@ object SearchQueries {
     TextSearch.searchStoreProximity(positionalStore(spark, dir), "doc_id",
       ProxTerms._1, ProxTerms._2, ProxWindow, TopK)
 
-  /** SR12 — proximity over a STREAMED positional store
-    * ([[graft.streaming.StreamingIngest.positionalIndexBatch]]): the
-    * corpus ingested as two committed micro-batches and COMPACTED
+  /** SR12 — proximity over a BATCH-APPENDED positional store
+    * ([[BatchStore.positionalIndexBatch]]): the
+    * corpus ingested as two committed batches and COMPACTED
     * (positions merged sorted, batch_id −1, markers carried through
     * the swap), then the q153 contract answered from the store —
     * protocol + compaction + reader proven equal to the direct
@@ -185,10 +185,10 @@ object SearchQueries {
   val q157StreamProximity: Q = (spark, dir) => {
     val ix = perProcessIndexDir(dir, "graft_posstream_p")
     val docs = Tables(spark, dir).documents.select("doc_id", "text")
-    graft.streaming.StreamingIngest.positionalIndexBatch(
+    BatchStore.positionalIndexBatch(
       docs.filter(col("doc_id") % 2 === 0), 0L, ix, "doc_id", "text",
       compactAtFiles = 0)
-    graft.streaming.StreamingIngest.positionalIndexBatch(
+    BatchStore.positionalIndexBatch(
       docs.filter(col("doc_id") % 2 === 1), 1L, ix, "doc_id", "text",
       compactAtFiles = 2)
     TextSearch.searchStoreProximity(spark.read.parquet(ix), "doc_id",
@@ -307,19 +307,19 @@ object SearchQueries {
     * consecutive-bigram sequence of the 3-char Han word. */
   val UniPhrase = "数据库"
 
-  /** SR14 — CJK phrase through the STREAMED positional store: the
-    * multilingual corpus ingested as two committed micro-batches,
+  /** SR14 — CJK phrase through the BATCH-APPENDED positional store: the
+    * multilingual corpus ingested as two committed batches,
     * compacted, then the exact phrase answered from positions alone
-    * ([[TextSearch.searchStorePhrase]]) — proving the Unicode stream
-    * flows through the streaming index loop, the committed-batch
+    * ([[TextSearch.searchStorePhrase]]) — proving the Unicode tokens
+    * flows through the positional batch store, the committed-batch
     * protocol and the store reader with positions intact. */
   val q159StreamPhraseCjk: Q = (spark, dir) => {
     val ix = perProcessIndexDir(dir, "graft_posuni_p")
     val docs = mlDocs(spark, dir)
-    graft.streaming.StreamingIngest.positionalIndexBatch(
+    BatchStore.positionalIndexBatch(
       docs.filter(col("doc_id") % 2 === 0), 0L, ix, "doc_id", "text",
       compactAtFiles = 0)
-    graft.streaming.StreamingIngest.positionalIndexBatch(
+    BatchStore.positionalIndexBatch(
       docs.filter(col("doc_id") % 2 === 1), 1L, ix, "doc_id", "text",
       compactAtFiles = 2)
     graft.operators.TextSearch.searchStorePhrase(spark.read.parquet(ix),
@@ -415,8 +415,8 @@ object SearchQueries {
   val TakedownRem = 3L
 
   /** SR22 — retrieval-store TAKEDOWN, strong form: the corpus ingested
-    * as two committed micro-batches, a takedown list applied through
-    * [[graft.streaming.StreamingIngest.deleteSwapSearchIndex]] —
+    * as two committed batches, a takedown list applied through
+    * [[BatchStore.deleteSwapSearchIndex]] —
     * postings, doc-length sidecar and totals manifest all fold
     * together — then the store searched with BM25. The oracle replays
     * BM25 over the SURVIVING corpus only: n_docs, avgdl, df and every
@@ -428,17 +428,17 @@ object SearchQueries {
   val q168StoreTakedown: Q = (spark, dir) => {
     val ix = perProcessIndexDir(dir, "graft_takedownix_p")
     val docs = Tables(spark, dir).documents.select("doc_id", "text")
-    graft.streaming.StreamingIngest.searchIndexBatch(
+    BatchStore.searchIndexBatch(
       docs.filter(col("doc_id") % 2 === 0), 0L, ix, "doc_id", "text",
       compactAtFiles = 0)
-    graft.streaming.StreamingIngest.searchIndexBatch(
+    BatchStore.searchIndexBatch(
       docs.filter(col("doc_id") % 2 === 1), 1L, ix, "doc_id", "text",
       compactAtFiles = 0)
-    graft.streaming.StreamingIngest.deleteSwapSearchIndex(spark, ix,
+    BatchStore.deleteSwapSearchIndex(spark, ix,
       "doc_id",
       docs.filter(col("doc_id") % TakedownMod === TakedownRem)
         .select("doc_id"))
-    graft.streaming.StreamingIngest.searchIndexTopKBm25(
+    BatchStore.searchIndexTopKBm25(
       spark, ix, "doc_id", QueryTerms, TopK,
       minShouldMatch = Some(MsmAtLeast))
   }

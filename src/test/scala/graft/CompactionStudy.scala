@@ -14,9 +14,9 @@ import graft.operators.{Dedup, IndexOps}
   * batch ([[Dedup.minhashProbeAuto]]).
   *
   * Fragmentation model: the corpus lands in `appends` equal slices,
-  * each written `mode("append").partitionBy("band")` — exactly the
-  * file pattern the streaming curate loop produces (one small file per
-  * shuffle partition per band per micro-batch). On an object store
+  * each written `mode("append").partitionBy("band")` — the file
+  * pattern an append-grown index accumulates (one small file per
+  * shuffle partition per band per batch). On an object store
   * each fragment costs an open + footer read + seek per probe scan;
   * locally the effect is task-setup and footer overhead, so the local
   * ratio is a LOWER bound on the S3 one.

@@ -234,13 +234,13 @@ class GraftExtensionsSpec extends SparkSpec {
     val corpus = Seq((1L, "spark joins the table table"),
       (2L, "spark spark joins 数据库"), (3L, "only joins"), (4L, "..."))
       .toDF("doc_id", "text")
-    // a streamed POSITIONAL store (serves frequency AND phrase readers)
+    // a POSITIONAL batch store (serves frequency AND phrase readers)
     // with its dl sidecar + totals manifest, compacted
     val ix = java.nio.file.Files.createTempDirectory("tvf-store").toString + "/ix"
-    graft.streaming.StreamingIngest.positionalIndexBatch(
+    graft.operators.BatchStore.positionalIndexBatch(
       corpus.filter(col("doc_id") <= 2), 0L, ix, "doc_id", "text",
       compactAtFiles = 0)
-    graft.streaming.StreamingIngest.positionalIndexBatch(
+    graft.operators.BatchStore.positionalIndexBatch(
       corpus.filter(col("doc_id") > 2), 1L, ix, "doc_id", "text",
       compactAtFiles = 2)
     assert(spark.sql(

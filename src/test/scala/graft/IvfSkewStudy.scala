@@ -16,11 +16,9 @@ import graft.operators.{IndexOps, Similarity}
   *     corpus-sized mega-cell — the r9 hazard the hash-order sample
   *     exists to close.
   *
-  *  2. LSH vs IVF as the STREAMING CURATE SCREEN: the same bounded
-  *     batch screened k=1 against the same persisted corpus, both
-  *     ways — the measured side of `curateIvfIngestStream`'s
-  *     screen-choice scaladoc. Both indexes are read from their
-  *     persisted partitioned form, exactly as the loops read them.
+  *  2. LSH vs IVF as an INGEST-TIME SCREEN: the same bounded batch
+  *     screened k=1 against the same persisted corpus, both ways.
+  *     Both indexes are read from their persisted partitioned form.
   *
   * Usage: Test/runMain graft.IvfSkewStudy [sfDir] [rowsPerCell] [nProbe] [batchRows]
   */

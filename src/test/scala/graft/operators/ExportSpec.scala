@@ -1169,4 +1169,31 @@ class ExportSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     rewrite(m.withColumn("note", lit("x")))
     intercept[IllegalStateException](Export.readManifest(spark, dir))
   }
+
+  test("manifest publishes hold the data's shard stats and _schema, and no _batch file") {
+    def schemaOf(dir: String) = org.apache.spark.sql.types.DataType.fromJson(
+      Files.readString(java.nio.file.Paths.get(Export.manifestDir(dir), "_schema")))
+    def expected(data: org.apache.spark.sql.DataFrame) =
+      Export.shardStats(Export.shardAssign(data, "doc_id", 4), csCols, 4)
+    def assertManifest(dir: String, data: org.apache.spark.sql.DataFrame): Unit = {
+      assert(Export.manifestRows(spark, dir) == expected(data), dir)
+      assert(schemaOf(dir) == Export.shardAssign(data, "doc_id", 4).schema, dir)
+      val control = new java.io.File(Export.manifestDir(dir)).list()
+        .filter(_.startsWith("_")).toSet
+      assert(control == Set("_SUCCESS", "_schema", "_placement"), s"$dir: $control")
+    }
+    val first = docs.filter(col("doc_id") < 120)
+    val second = docs.filter(col("doc_id") >= 120)
+    val a = tmp("man-a")
+    Export.shardedWrite(spark, first, "doc_id", csCols, 4, a)
+    assertManifest(a, first)
+    Export.appendShards(spark, second, "doc_id", csCols, a)
+    assertManifest(a, docs)
+    val b = tmp("man-b"); val c = tmp("man-c")
+    Export.shardedWrite(spark, first, "doc_id", csCols, 4, b)
+    Export.shardedWrite(spark, second, "doc_id", csCols, 4, c)
+    val dst = tmp("man-concat")
+    Export.concatExports(spark, Seq(b, c), dst)
+    assertManifest(dst, docs)
+  }
 }

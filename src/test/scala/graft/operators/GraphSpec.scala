@@ -232,21 +232,65 @@ class GraphSpec extends SparkSpec {
     assert(Graph.liftPairs(m, "g", "i", maxGroupItems = 1L).isEmpty)
   }
 
-  test("srcPartitionedMaterialized: detects the q175 shared-checkpoint shape") {
+  /** The `repartition(src)` exchanges in the plans of every action run
+    * by `body` (eager checkpoints included), counted from the session's
+    * query-execution events. A marker query run after `body` flushes the
+    * listener queue, so every event of `body` has arrived when it does. */
+  private def srcRepartitions(body: => Unit): Int = {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, ShuffleExchangeExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val marker = "__graph_spec_flush"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val helper = new AdaptiveSparkPlanHelper {}
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == marker)) flushed.countDown()
+        else seen.add(helper.collect(qe.executedPlan) {
+          case s: ShuffleExchangeExec if s.shuffleOrigin == REPARTITION_BY_COL &&
+              (s.outputPartitioning match {
+                case HashPartitioning(Seq(a: AttributeReference), _) => a.name == "src"
+                case _ => false
+              }) => s
+        }.size)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).toDF(marker).collect()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the marker query's event never arrived")
+    } finally spark.listenerManager.unregister(listener)
+    seen.toArray.map(_.asInstanceOf[Int]).sum
+  }
+
+  test("pageRank*: one src repartition per call, ranks unchanged on a pre-checkpointed graph") {
     import org.apache.spark.sql.functions.col
-    // the q175 path: src-repartitioned eager checkpoint, THEN the
-    // operator's asEdges rename — detection must survive the toDF
-    val shared = edges.repartition(col("src")).localCheckpoint(true)
-    assert(Graph.srcPartitionedMaterialized(shared.toDF("src", "dst")))
-    // renamed columns collapse back to the same attributes
-    assert(Graph.srcPartitionedMaterialized(
-      shared.toDF("a", "b").toDF("src", "dst")))
-    // a lazy plan, a dst-partitioned checkpoint, and an unpartitioned
-    // checkpoint must all MISS (→ the operator re-checkpoints)
-    assert(!Graph.srcPartitionedMaterialized(edges))
-    assert(!Graph.srcPartitionedMaterialized(
-      edges.repartition(col("dst")).localCheckpoint(true)))
-    assert(!Graph.srcPartitionedMaterialized(edges.localCheckpoint(true)))
+    val we = Seq((1L, 2L, 3L), (2L, 1L, 1L), (1L, 3L, 1L), (4L, 1L, 2L))
+      .toDF("src", "dst", "w")
+    val seeds = Seq(1L).toDF("node")
+    val calls: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame)] = Seq(
+      ("pageRankFixed", Graph.pageRankFixed(_, 3), edges),
+      ("pageRankWeightedFixed", Graph.pageRankWeightedFixed(_, 3), we),
+      ("pageRankPersonalized", Graph.pageRankPersonalized(_, seeds, 3), edges))
+    calls.foreach { case (name, pr, in) =>
+      def ranks(g: org.apache.spark.sql.DataFrame) =
+        pr(g).as[(Long, Long)].collect().toMap
+      var lazyRanks = Map.empty[Long, Long]
+      assert(srcRepartitions { lazyRanks = ranks(in) } == 1, name)
+      // the q175 shape: the caller already holds a src-partitioned
+      // checkpoint; the operator repartitions it once more, same ranks
+      val shared = in.repartition(col("src")).localCheckpoint(true)
+      var sharedRanks = Map.empty[Long, Long]
+      assert(srcRepartitions { sharedRanks = ranks(shared) } == 1, name)
+      assert(sharedRanks == lazyRanks, name)
+    }
   }
 
   test("edge shape is enforced") {

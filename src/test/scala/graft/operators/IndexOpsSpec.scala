@@ -40,7 +40,7 @@ class IndexOpsSpec extends SparkSpec {
     val dir = tmp("ixops_mh")
     Dedup.minhashIndex(docs(1L to 20L: _*), "doc_id", "text")
       .write.mode("append").partitionBy("band").parquet(dir)
-    // three append-grown extends — the streaming curate loop's file pattern
+    // three append-grown extends — an incrementally grown index's file pattern
     Seq(21L to 30L, 31L to 40L, 41L to 50L).foreach { ids =>
       val index = spark.read.parquet(dir)
       Dedup.minhashIndexExtend(index, docs(ids: _*), "doc_id", "text")
@@ -282,7 +282,7 @@ class IndexOpsSpec extends SparkSpec {
       "precondition: id 5 is findable before the takedown")
     val srcRows = spark.read.parquet(mh).count()
     // list includes an absent id — ignored, not an error
-    val left = IndexOps.deleteSwapMinhash(spark, mh,
+    val left = IndexOps.deleteSwap(spark, mh, "band", Seq("band_key"),
       "doc_id", Seq(5L, 17L, 999L).toDF("doc_id"))
     val after = spark.read.parquet(mh)
     assert(after.filter(col("doc_id").isin(5L, 17L)).isEmpty,
@@ -296,11 +296,11 @@ class IndexOpsSpec extends SparkSpec {
       minAgree = 1).filter(col("corpus_doc_id") === 9L).count() > 0)
     assert(after.select("ix_n", "ix_k", "ix_bands").distinct().count() == 1)
     // all-absent list: a no-op
-    assert(IndexOps.deleteSwapMinhash(spark, mh,
+    assert(IndexOps.deleteSwap(spark, mh, "band", Seq("band_key"),
       "doc_id", Seq(888L).toDF("doc_id")) == left)
     // deleting everything is refused — an empty index is a rebuild
     intercept[IllegalArgumentException] {
-      IndexOps.deleteSwapMinhash(spark, mh,
+      IndexOps.deleteSwap(spark, mh, "band", Seq("band_key"),
         "doc_id", (1L to 30L).toDF("doc_id"))
     }
     // --- lsh (embedding) ---
@@ -308,7 +308,8 @@ class IndexOpsSpec extends SparkSpec {
     Similarity.lshIndex(vecs(1L to 20L: _*), "vec_id", "embedding",
         planes = 2, dims = 4, tables = 3)
       .write.mode("append").partitionBy("tbl").parquet(lsh)
-    IndexOps.deleteSwapLsh(spark, lsh, "vec_id", Seq(7L).toDF("vec_id"))
+    IndexOps.deleteSwap(spark, lsh, "tbl", Seq("bucket"), "vec_id",
+      Seq(7L).toDF("vec_id"))
     val lshAfter = spark.read.parquet(lsh)
     assert(lshAfter.filter(col("vec_id") === 7L).isEmpty)
     assert(Similarity.lshIndexProbeAuto(vecs(7L), lshAfter, "vec_id",

@@ -77,15 +77,18 @@ class IndexStampSpec extends SparkSpec {
   }
 
   test("streaming screens validate the stamp at plan construction too") {
-    import graft.streaming.StreamingIngest
+    // the near-dup and embedding screens are the probes themselves; a
+    // single missing stamp column is refused before any plan runs
     val strippedMh = Dedup.minhashIndex(docs, "doc_id", "text").drop("ix_bands")
-    intercept[IllegalArgumentException](
-      StreamingIngest.nearDupScreenStream(docs, strippedMh, "doc_id", "text"))
+    val e1 = intercept[IllegalArgumentException](
+      Dedup.minhashProbe(docs, strippedMh, "doc_id", "text"))
+    assert(e1.getMessage.contains("ix_bands"))
     val strippedLsh = Similarity.lshIndex(vecs, "vec_id", "embedding",
       planes = 2, dims = 4).drop("ix_tables")
-    intercept[IllegalArgumentException](
-      StreamingIngest.embeddingScreenStream(vecs, strippedLsh, "vec_id",
-        "embedding", minMicro = 0L, planes = 2, dims = 4))
+    val e2 = intercept[IllegalArgumentException](
+      Similarity.lshIndexProbe(vecs, strippedLsh, "vec_id", "embedding",
+        minMicro = 0L, planes = 2, dims = 4))
+    assert(e2.getMessage.contains("ix_tables"))
   }
 
   test("probeAuto reads parameters from the stamp: equals the explicit probe, never mismatches") {

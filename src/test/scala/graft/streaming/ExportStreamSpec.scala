@@ -8,10 +8,13 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.operators.Export
 
-/** The streaming sharded export: batch equivalence (streamed chunks
-  * reach the one-shot export's exact manifest and rows) and
-  * exactly-once under whole-batch replay after EVERY write of the
-  * protocol — the same proof discipline as the curate loops. */
+/** A sharded export grown chunk by chunk: every generation lands through
+  * [[Export.appendShards]] on top of a bootstrap [[Export.shardedWrite]],
+  * and the maintenance and attestation calls run between generations.
+  * The chunks must reach the one-shot export's exact manifest and rows,
+  * and every crash window between chunks must heal at the next entry.
+  * The suite keeps the name it had when a streaming sink drove these
+  * appends, so its test ids stay stable. */
 class ExportStreamSpec extends SparkSpec {
   import spark.implicits._
 
@@ -25,21 +28,40 @@ class ExportStreamSpec extends SparkSpec {
       concat(lit("body "), col("id")).as("text"),
       when(col("id") % 3 === 0, "en").otherwise("de").as("lang"))
 
-  /** Bootstrap an export with the first slice, like the curate loops
-    * bootstrap their index dirs. */
+  /** Generation zero: the first slice, published one-shot. */
   private def bootstrap(dir: String, nShards: Int): Unit =
     Export.shardedWrite(spark, docsRange(0, 60), "doc_id", csCols, nShards, dir)
+
+  private def append(dir: String, df: DataFrame): Unit =
+    Export.appendShards(spark, df, "doc_id", csCols, dir)
 
   private def manifestCanon(dir: String) =
     canon(Export.readManifest(spark, dir))
 
+  private def totalRows(dir: String): Long =
+    Export.readManifest(spark, dir).agg(sum("n_rows")).as[Long].head()
+
+  private def dataFiles(dir: String): Seq[java.io.File] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    walk(new java.io.File(Export.dataDir(dir))).filter(_.getName.endsWith(".parquet"))
+  }
+
+  /** Delete one data file of shard `k`: a lost-file corruption. */
+  private def corruptShard(dir: String, k: Int): Unit = {
+    val shardDir = new java.io.File(Export.dataDir(dir), s"shard=$k")
+    assert(shardDir.exists, s"fixture layout changed: $shardDir missing")
+    shardDir.listFiles().filter(_.getName.endsWith(".parquet")).take(1)
+      .foreach(f => assert(f.delete()))
+    spark.catalog.refreshByPath(dir)
+  }
+
   test("streamed chunks reach the one-shot manifest and rows (batch equivalence)") {
     val dir = tmp("exps_equiv")
     bootstrap(dir, 8)
-    // three "micro-batches" through the real batch body
-    StreamingIngest.exportShardBatch(docsRange(60, 100), 0L, dir, "doc_id", csCols)
-    StreamingIngest.exportShardBatch(docsRange(100, 150), 1L, dir, "doc_id", csCols)
-    StreamingIngest.exportShardBatch(docsRange(150, 200), 2L, dir, "doc_id", csCols)
+    append(dir, docsRange(60, 100))
+    append(dir, docsRange(100, 150))
+    append(dir, docsRange(150, 200))
 
     val oneShot = tmp("exps_oneshot")
     Export.shardedWrite(spark, docsRange(0, 200), "doc_id", csCols, 8, oneShot)
@@ -50,242 +72,38 @@ class ExportStreamSpec extends SparkSpec {
     Export.verifyShards(spark, dir, csCols)
   }
 
-  test("the sink runs as a real AvailableNow stream over a drop dir") {
-    val drop = Files.createTempDirectory("exps_drop").toString
-    val ckpt = tmp("exps_ckpt")
-    val dir = tmp("exps_stream")
-    bootstrap(dir, 4)
-    docsRange(60, 120).coalesce(1).write.mode("overwrite").parquet(drop)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(drop).schema)
-      .parquet(drop)
-    StreamingIngest.shardedExportStream(stream, dir, ckpt, "doc_id", csCols)
-      .start().awaitTermination()
-    assert(Export.readManifest(spark, dir)
-      .agg(sum("n_rows")).as[Long].head() == 120)
-    Export.verifyShards(spark, dir, csCols)
-    // restart with nothing new: no double-processing
-    StreamingIngest.shardedExportStream(spark.readStream
-        .schema(spark.read.parquet(drop).schema).parquet(drop),
-      dir, ckpt, "doc_id", csCols)
-      .start().awaitTermination()
-    assert(Export.readManifest(spark, dir)
-      .agg(sum("n_rows")).as[Long].head() == 120)
-  }
-
-  test("whole-batch replay after every protocol write converges to the clean result") {
-    // the clean run's end state, for comparison
-    val ref = tmp("exps_ref")
-    bootstrap(ref, 8)
-    StreamingIngest.exportShardBatch(docsRange(60, 130), 0L, ref, "doc_id", csCols)
-    val refManifest = manifestCanon(ref)
-    val refRows = canon(Export.readShards(spark, ref).select("doc_id", "text", "lang"))
-
-    for (failAt <- Seq(1, 2)) {
-      val dir = tmp(s"exps_crash$failAt")
-      bootstrap(dir, 8)
-      intercept[IllegalStateException] {
-        StreamingIngest.exportShardBatch(docsRange(60, 130), 0L, dir,
-          "doc_id", csCols, failAfterStep = failAt)
-      }
-      // the replay (same batch id, same rows) must converge
-      StreamingIngest.exportShardBatch(docsRange(60, 130), 0L, dir, "doc_id", csCols)
-      assert(manifestCanon(dir) == refManifest, s"manifest diverged after crash at step $failAt")
-      assert(canon(Export.readShards(spark, dir).select("doc_id", "text", "lang"))
-        == refRows, s"rows diverged after crash at step $failAt")
-      Export.verifyShards(spark, dir, csCols)
-      // post-commit replay: strict no-op
-      StreamingIngest.exportShardBatch(docsRange(60, 130), 0L, dir, "doc_id", csCols)
-      assert(manifestCanon(dir) == refManifest)
-    }
-  }
-
   test("compactExport collapses the sink's per-batch files, invisibly to the manifest") {
     val dir = tmp("exps_compact")
     bootstrap(dir, 4)
-    for (b <- 0 until 5)
-      StreamingIngest.exportShardBatch(
-        docsRange(60 + b * 20, 80 + b * 20), b.toLong, dir, "doc_id", csCols)
+    for (b <- 0 until 5) append(dir, docsRange(60 + b * 20, 80 + b * 20))
     val before = manifestCanon(dir)
-    def dataFiles(): Int = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(Export.dataDir(dir)))
-        .count(_.getName.endsWith(".parquet"))
-    }
-    val grown = dataFiles()
+    val grown = dataFiles(dir).size
     assert(grown >= 4 * 6, s"expected one file per shard per generation, got $grown")
     val rows = Export.compactExport(spark, dir, csCols)
     assert(rows == 160)
-    assert(dataFiles() < grown / 3, "compaction should collapse the per-batch files")
+    assert(dataFiles(dir).size < grown / 3, "compaction should collapse the per-batch files")
     assert(manifestCanon(dir) == before, "compaction must be invisible to the manifest")
     // each shard reads back in the portable order after compaction
     val ords = Export.readShardOrdered(spark, dir, 1).select("ord").as[Long].collect()
     assert(ords.length > 0 && ords.sameElements(ords.sorted))
-    // the sink keeps appending on top of the compacted layout
-    StreamingIngest.exportShardBatch(docsRange(160, 170), 5L, dir, "doc_id", csCols)
+    // appends keep landing on top of the compacted layout
+    append(dir, docsRange(160, 170))
     Export.verifyShards(spark, dir, csCols)
-  }
-
-  test("drop -> curate stream -> export stream composes exactly-once end to end") {
-    import graft.operators.Dedup
-    // the production shape: raw drops are curated by the self-growing-
-    // index loop, and the curated survivors stream STRAIGHT INTO the
-    // sharded export — two committed-batch hops chained by a file
-    // source, each exactly-once, so the export holds the curated corpus
-    // exactly once whatever the drop/drain interleaving.
-    val storeA = "the quick brown fox jumps over a lazy dog near the river bank"
-    val storeB = "a merchant of venice sailed in the morning tide carrying spice and silk"
-    val novelC = "seven engineers of the valley debugged a streaming pipeline in the night"
-    val novelD = "nine ravens of the tower guarded a rusty crown in the rain"
-    val store = Seq((1L, storeA), (2L, storeB)).toDF("doc_id", "text")
-    val cs = Seq("doc_id", "text")
-
-    val indexDir = tmp("chain_ix"); val curOut = tmp("chain_curated")
-    val drop = tmp("chain_drop"); val ckptCur = tmp("chain_ckpt_cur")
-    val expDir = tmp("chain_export"); val ckptExp = tmp("chain_ckpt_exp")
-    Dedup.minhashIndex(store, "doc_id", "text")
-      .write.mode("overwrite").partitionBy("band").parquet(indexDir)
-    // export bootstrap: the already-curated store is generation zero
-    Export.shardedWrite(spark, store, "doc_id", cs, 4, expDir)
-
-    val gate: DataFrame => DataFrame =
-      df => df.filter(graft.functions.TextAnalysis.qualityKeep(col("text")))
-    def curateDrain(): Unit = {
-      val s = spark.readStream.schema("doc_id LONG, text STRING").parquet(drop)
-      StreamingIngest.curateIngestStream(s, indexDir, curOut, ckptCur,
-        "doc_id", "text", gate).start().awaitTermination()
-    }
-    def exportDrain(): Unit = {
-      val s = spark.readStream.schema("doc_id LONG, text STRING").parquet(curOut)
-      StreamingIngest.shardedExportStream(s, expDir, ckptExp, "doc_id", cs)
-        .start().awaitTermination()
-    }
-
-    // drop 1: exact dup of the store, a novel doc twice (in-batch dup),
-    // a gate-failing fragment — only the novel doc's min-id copy survives
-    Seq((101L, storeA), (102L, novelC), (103L, novelC), (104L, "tiny"))
-      .toDF("doc_id", "text").write.mode("append").parquet(drop)
-    curateDrain(); exportDrain()
-    // drop 2: a CROSS-BATCH dup of the drop-1 survivor (the grown index
-    // must screen it) plus one genuinely new doc
-    Seq((201L, novelC), (202L, novelD))
-      .toDF("doc_id", "text").write.mode("append").parquet(drop)
-    curateDrain(); exportDrain()
-
-    val want = store.union(Seq((102L, novelC), (202L, novelD)).toDF("doc_id", "text"))
-    assertSameRows(Export.readShards(spark, expDir).select("doc_id", "text"), want)
-    Export.verifyShards(spark, expDir, cs)
-    // idle restart of both hops: nothing re-processed, nothing duplicated
-    curateDrain(); exportDrain()
-    assertSameRows(Export.readShards(spark, expDir).select("doc_id", "text"), want)
-    assert(Export.readManifest(spark, expDir).agg(sum("n_rows")).as[Long].head() == 4)
-  }
-
-  private def dataFiles(dir: String): Int = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-    walk(new java.io.File(Export.dataDir(dir)))
-      .count(_.getName.endsWith(".parquet"))
-  }
-
-  test("in-loop compaction keeps the sink's file count bounded, crash-replay safe") {
-    val dir = tmp("exps_inloop")
-    bootstrap(dir, 4)
-    val threshold = dataFiles(dir) + 8
-    var peak = 0
-    for (b <- 0 until 6) {
-      StreamingIngest.exportShardBatch(
-        docsRange(60 + b * 20, 80 + b * 20), b.toLong, dir, "doc_id", csCols,
-        compactAtFiles = threshold)
-      peak = math.max(peak, dataFiles(dir))
-    }
-    // the threshold fired at least once: storage stays bounded instead
-    // of growing one file set per batch
-    assert(dataFiles(dir) < peak || peak < threshold + 8,
-      s"in-loop compaction never fired (files=${dataFiles(dir)}, peak=$peak, threshold=$threshold)")
-    assert(Export.readManifest(spark, dir).agg(sum("n_rows")).as[Long].head() == 180)
-    Export.verifyShards(spark, dir, csCols)
-
-    // crash AFTER the in-loop compaction (failpoint 3): the batch is
-    // already committed and the compaction already swapped — the replay
-    // recovers at entry, re-runs maintenance idempotently, and the
-    // export stays intact
-    intercept[IllegalStateException] {
-      StreamingIngest.exportShardBatch(docsRange(180, 200), 6L, dir, "doc_id",
-        csCols, compactAtFiles = 1, failAfterStep = 3)
-    }
-    StreamingIngest.exportShardBatch(docsRange(180, 200), 6L, dir, "doc_id",
-      csCols, compactAtFiles = 1)
-    assert(Export.readManifest(spark, dir).agg(sum("n_rows")).as[Long].head() == 200)
-    assertSameRows(Export.readShards(spark, dir).select("doc_id", "text", "lang"),
-      docsRange(0, 200))
-    Export.verifyShards(spark, dir, csCols)
-  }
-
-  test("steady-state compaction triggers on FRAGMENTATION, not the absolute file count") {
-    // once the export's compacted steady state itself exceeds an
-    // absolute threshold, an absolute trigger would rewrite the whole
-    // corpus after EVERY batch — the fragmentation trigger must not
-    val dir = tmp("exps_frag")
-    bootstrap(dir, 4)
-    // tiny target: 200 rows -> compacted target ~ ceil(rows/10) = 20
-    // files, far above any sane absolute threshold at this scale
-    for (b <- 0 until 5)
-      StreamingIngest.exportShardBatch(
-        docsRange(60 + b * 20, 80 + b * 20), b.toLong, dir, "doc_id", csCols,
-        compactAtFiles = 15, targetRowsPerFile = 10L)
-    Export.verifyShards(spark, dir, csCols)
-    // the export is now past compactAtFiles x targetRowsPerFile rows
-    // (160 > 150) — the exact regime where an absolute trigger loops. Snapshot the data files, run one more batch with the
-    // same maintenance settings, and require the old generation's files
-    // to SURVIVE when fragmentation is under target + slack — an
-    // absolute trigger would have rewritten every one of them
-    def files(d: String): Set[String] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(Export.dataDir(d)))
-        .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSet
-    }
-    // compact once so the store is at its steady state, then measure
-    Export.compactExport(spark, dir, csCols, targetRowsPerFile = 10L)
-    val before = files(dir)
-    StreamingIngest.exportShardBatch(docsRange(160, 170), 5L, dir, "doc_id",
-      csCols, compactAtFiles = 15, targetRowsPerFile = 10L)
-    val after = files(dir)
-    assert(before.subsetOf(after),
-      s"steady-state batch rewrote the export (lost ${(before -- after).size} " +
-        s"of ${before.size} files) — the compaction trigger is absolute, not fragmentation-based")
-    Export.verifyShards(spark, dir, csCols)
-    assert(Export.readManifest(spark, dir).agg(sum("n_rows")).as[Long].head() == 170)
+    assert(totalRows(dir) == 170)
   }
 
   test("compaction floor is one file per nonempty shard, not the bare row ceil") {
-    // many shards, few rows: ceil(rows/target) = 1 but compaction
-    // CANNOT produce fewer than one file per nonempty shard directory,
-    // so a trigger floored at the bare ceil reads the fully-compacted
-    // export as "fragmented" forever and rewrites the corpus after
-    // every committed batch — replays included
+    // many shards, few rows: ceil(rows/target) = 1, but compaction
+    // cannot write fewer than one file per nonempty shard directory
     val dir = tmp("exps_floor")
     bootstrap(dir, 16)
-    StreamingIngest.exportShardBatch(docsRange(60, 100), 0L, dir, "doc_id",
-      csCols, compactAtFiles = 4, targetRowsPerFile = 1000L)
+    append(dir, docsRange(60, 100))
     Export.compactExport(spark, dir, csCols, targetRowsPerFile = 1000L)
-    def files(d: String): Set[String] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(Export.dataDir(d)))
-        .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSet
-    }
-    val steady = files(dir)
-    assert(steady.size > 1 + 4, // the regime where the bare ceil loops
-      s"fixture too small to exercise the floor (files=${steady.size})")
-    // replay of the committed batch: no new files — must not re-compact
-    StreamingIngest.exportShardBatch(docsRange(60, 100), 0L, dir, "doc_id",
-      csCols, compactAtFiles = 4, targetRowsPerFile = 1000L)
-    assert(files(dir) == steady,
-      "a replay over a fully-compacted many-shard export rewrote it — " +
-        "the trigger's floor must be the nonempty-shard count")
+    val nonEmpty = Export.readManifest(spark, dir).filter(col("n_rows") > 0).count()
+    val perShard = dataFiles(dir).groupBy(_.getParentFile.getName).map(_._2.size)
+    assert(nonEmpty > 1 + 4, s"fixture too small to exercise the floor ($nonEmpty shards)")
+    assert(perShard.size == nonEmpty && perShard.forall(_ == 1),
+      s"expected exactly one file in each of $nonEmpty nonempty shards, got $perShard")
     Export.verifyShards(spark, dir, csCols)
   }
 
@@ -296,163 +114,129 @@ class ExportStreamSpec extends SparkSpec {
         "doc_id", "w", 4).drop("w"),
       csCols, 4, dir)
     val ex = intercept[IllegalArgumentException] {
-      StreamingIngest.exportShardBatch(docsRange(60, 80), 0L, dir, "doc_id", csCols)
+      append(dir, docsRange(60, 80))
     }
     assert(ex.getMessage.contains("placement=assigned"))
     Export.verifyShards(spark, dir, csCols)
+    assert(totalRows(dir) == 60)
   }
 
   test("mid-stream schema evolution: the sink demands the new shape, old batches read as nulls") {
     val dir = tmp("exps_evolve")
     bootstrap(dir, 4)
-    StreamingIngest.exportShardBatch(docsRange(60, 100), 0L, dir, "doc_id", csCols)
-    // a planned migration lands between committed batches
+    append(dir, docsRange(60, 100))
+    // a planned migration lands between generations
     import org.apache.spark.sql.types.{DoubleType, StructField}
     Export.evolveExportSchema(spark, dir,
       Seq(StructField("quality", DoubleType, nullable = true)))
-    // the next batch MUST carry the new column — the gate refuses the old shape
+    // the next chunk MUST carry the new column — the gate refuses the old shape
     val ex = intercept[IllegalArgumentException] {
-      StreamingIngest.exportShardBatch(docsRange(100, 120), 1L, dir, "doc_id", csCols)
+      append(dir, docsRange(100, 120))
     }
     assert(ex.getMessage.contains("drifts"))
-    // and the new-shape batch lands; both generations read by name
-    StreamingIngest.exportShardBatch(
-      docsRange(100, 120).withColumn("quality", lit(0.7)),
-      1L, dir, "doc_id", csCols)
+    // the new-shape chunk lands; both generations read by name
+    append(dir, docsRange(100, 120).withColumn("quality", lit(0.7)))
     val back = Export.readShards(spark, dir)
     assert(back.count() == 120)
     assert(back.filter(col("quality").isNotNull).count() == 20)
     Export.verifyShards(spark, dir, csCols)
-    // the refused batch attempt left no committed residue: batch 1 is
-    // exactly the successful one (exactly-once intact across the refusal)
+    // the refused attempt left no residue: the chunk landed exactly once
     assert(back.filter(col("doc_id") >= 100 && col("doc_id") < 120).count() == 20)
   }
 
   test("scheduled verification raises on a corrupted shard at the next check") {
     val dir = tmp("exps_verify")
     bootstrap(dir, 4)
-    // verifyEvery = 2: batches 0 (no check) and 1 (checked) pass clean
-    StreamingIngest.exportShardBatch(docsRange(60, 80), 0L, dir, "doc_id", csCols,
-      verifyEvery = 2)
-    StreamingIngest.exportShardBatch(docsRange(80, 100), 1L, dir, "doc_id", csCols,
-      verifyEvery = 2)
-    // corrupt one shard between batches
-    val shardDir = new java.io.File(Export.dataDir(dir), "shard=2")
-    shardDir.listFiles().filter(_.getName.endsWith(".parquet")).take(1)
-      .foreach(f => assert(f.delete()))
-    spark.catalog.refreshByPath(dir)
-    // batch 2 commits without a check; batch 3 hits the schedule and raises
-    StreamingIngest.exportShardBatch(docsRange(100, 120), 2L, dir, "doc_id", csCols,
-      verifyEvery = 2)
+    append(dir, docsRange(60, 80))
+    append(dir, docsRange(80, 100))
+    Export.verifyShards(spark, dir, csCols)
+    // corrupt one shard between generations; the next append does not
+    // look at old files, so it still lands
+    corruptShard(dir, 2)
+    append(dir, docsRange(100, 120))
     val ex = intercept[IllegalStateException] {
-      StreamingIngest.exportShardBatch(docsRange(120, 140), 3L, dir, "doc_id", csCols,
-        verifyEvery = 2)
+      Export.verifyShards(spark, dir, csCols)
     }
     assert(ex.getMessage.contains("diverges"))
-    // batch 3's DATA is committed (verification runs post-commit);
-    // the failure is the attestation, pointing at the corruption
+    assert(ex.getMessage.contains("2"))
   }
 
   test("in-loop takedown: pending id lists applied between committed batches, crash-idempotent") {
     val dir = tmp("exps_takedown")
-    val pend = Files.createTempDirectory("exps_pend").toString
     bootstrap(dir, 4)
-    StreamingIngest.exportShardBatch(docsRange(60, 100), 0L, dir, "doc_id", csCols,
-      applyDeletesFrom = pend)
-    // the operator drops an id list; the next batch applies it strictly
-    // AFTER its own rows commit — so a listed id in THAT batch (105) is
-    // honored too, alongside ids from earlier generations (5, 63)
-    Seq(5L, 63L, 105L, 9999L).toDF("doc_id").write.parquet(s"$pend/takedown_1")
-    StreamingIngest.exportShardBatch(docsRange(100, 120), 1L, dir, "doc_id", csCols,
-      applyDeletesFrom = pend)
+    append(dir, docsRange(60, 100))
+    append(dir, docsRange(100, 120))
+    // an id list between generations: ids from the bootstrap (5), an
+    // earlier append (63), the latest append (105) and one absent id
+    val ids = Seq(5L, 63L, 105L, 9999L).toDF("doc_id")
+    Export.deleteIdsFromExport(spark, dir, ids, "doc_id", csCols)
     val back = Export.readShards(spark, dir)
     assert(back.count() == 117) // 120 ingested − 3 present victims (9999 absent)
     assert(back.filter(col("doc_id").isin(5L, 63L, 105L)).isEmpty)
     Export.verifyShards(spark, dir, csCols)
-    // the list was consumed into _applied — batch 2 has nothing to apply
-    assert(!new java.io.File(pend, "takedown_1").exists)
-    assert(new java.io.File(s"$pend/_applied/takedown_1").exists)
-    // crash AFTER the delete, BEFORE consuming the list: batch 2 is
-    // already committed (the delete runs post-commit), so the replay
-    // skips its write path, re-applies idempotently (absent ids
-    // ignored) and then consumes
-    Seq(70L).toDF("doc_id").write.parquet(s"$pend/takedown_2")
-    intercept[IllegalStateException] {
-      StreamingIngest.exportShardBatch(docsRange(120, 140), 2L, dir, "doc_id", csCols,
-        applyDeletesFrom = pend, failAfterStep = 4)
-    }
-    assert(new java.io.File(pend, "takedown_2").exists, "crash before consume")
-    StreamingIngest.exportShardBatch(docsRange(120, 140), 2L, dir, "doc_id", csCols,
-      applyDeletesFrom = pend)
+    // a replayed list is an idempotent no-op
+    val settled = manifestCanon(dir)
+    Export.deleteIdsFromExport(spark, dir, ids, "doc_id", csCols)
+    assert(manifestCanon(dir) == settled)
+    // the next generation lands, then the next list applies
+    append(dir, docsRange(120, 140))
+    Export.deleteIdsFromExport(spark, dir, Seq(70L).toDF("doc_id"), "doc_id", csCols)
     val after = Export.readShards(spark, dir)
     assert(after.count() == 136) // 140 − {5, 63, 105, 70}
     assert(after.filter(col("doc_id") === 70L).isEmpty)
-    assert(new java.io.File(s"$pend/_applied/takedown_2").exists)
     Export.verifyShards(spark, dir, csCols)
   }
 
   test("rotating subset attestation reaches a corrupted shard within one rotation") {
     val dir = tmp("exps_rotate")
     bootstrap(dir, 4)
-    // verifyEvery = 1, k = 2: check 0 attests shards {0,1}, check 1
-    // attests {2,3} — each check scans HALF the export, full coverage
-    // every two checks
-    StreamingIngest.exportShardBatch(docsRange(60, 100), 0L, dir, "doc_id", csCols,
-      verifyEvery = 1, verifyShardsPerCheck = 2)
+    append(dir, docsRange(60, 100))
+    // k = 2: check 0 attests shards {0,1}, check 1 attests {2,3} — each
+    // check scans half the export, full coverage every two checks
+    def check(n: Int) =
+      Export.verifyShardSubset(spark, dir, csCols, Seq(2 * (n % 2), 2 * (n % 2) + 1))
+    check(0)
     // corrupt shard 3 AFTER check 0 (which does not cover it)
-    val shardDir = new java.io.File(Export.dataDir(dir), "shard=3")
-    assert(shardDir.exists, s"fixture layout changed: $shardDir missing")
-    shardDir.listFiles().filter(_.getName.endsWith(".parquet")).take(1)
-      .foreach(f => assert(f.delete()))
-    spark.catalog.refreshByPath(dir)
+    corruptShard(dir, 3)
+    assert(check(0).filter(!col("ok")).isEmpty)
     // check 1 covers {2,3}: the rotation reaches the corruption
-    val ex = intercept[IllegalStateException] {
-      StreamingIngest.exportShardBatch(docsRange(100, 120), 1L, dir, "doc_id", csCols,
-        verifyEvery = 1, verifyShardsPerCheck = 2)
-    }
+    val ex = intercept[IllegalStateException](check(1))
     assert(ex.getMessage.contains("3"))
-    // a REPLAY of batch 1 re-checks the same subset (check number is a
-    // pure function of the batch id) — still raising, deterministically
-    val ex2 = intercept[IllegalStateException] {
-      StreamingIngest.exportShardBatch(docsRange(100, 120), 1L, dir, "doc_id", csCols,
-        verifyEvery = 1, verifyShardsPerCheck = 2)
-    }
+    // the same check again raises again, deterministically
+    val ex2 = intercept[IllegalStateException](check(1))
     assert(ex2.getMessage.contains("3"))
   }
 
   test("a committed batch's replay still recovers a crashed maintenance swap") {
-    // the in-loop compactExport runs AFTER the commit marker, so its
-    // crash window is replayed with isCommitted == true — entry
-    // recovery must run unconditionally or the stream wedges
+    // a compactExport that crashed between swapDirs' two renames leaves
+    // the live data dir renamed away and `.old` surviving; the next
+    // entry must roll the swap back instead of appending into nothing
     val dir = tmp("exps_postcommit")
     bootstrap(dir, 4)
-    StreamingIngest.exportShardBatch(docsRange(60, 100), 0L, dir, "doc_id", csCols)
-    // simulate compactExport crashing between swapDirs' two renames:
-    // live data dir renamed away, .old surviving
+    append(dir, docsRange(60, 100))
     val d = new java.io.File(Export.dataDir(dir))
     assert(d.renameTo(new java.io.File(Export.dataDir(dir) + ".old")))
     spark.catalog.refreshByPath(dir)
-    // replay of the ALREADY-COMMITTED batch 0, with maintenance on:
-    // must roll back the swap and verify clean instead of throwing
-    StreamingIngest.exportShardBatch(docsRange(60, 100), 0L, dir, "doc_id", csCols,
-      compactAtFiles = 1, verifyEvery = 1)
+    append(dir, docsRange(100, 120))
     Export.verifyShards(spark, dir, csCols)
-    assert(Export.readManifest(spark, dir).agg(sum("n_rows")).as[Long].head() == 100)
+    assert(totalRows(dir) == 120)
+    assertSameRows(Export.readShards(spark, dir).select("doc_id", "text", "lang"),
+      docsRange(0, 120))
+    // and the maintenance re-run completes on the recovered layout
+    assert(Export.compactExport(spark, dir, csCols) == 120)
+    Export.verifyShards(spark, dir, csCols)
   }
 
   test("crash mid-manifest-swap is recovered at replay entry") {
     val dir = tmp("exps_swapcrash")
     bootstrap(dir, 8)
-    StreamingIngest.exportShardBatch(docsRange(60, 130), 0L, dir, "doc_id", csCols)
-    // simulate the swap's crash window before batch 1: live manifest
-    // renamed away, fresh one still in .new position
+    append(dir, docsRange(60, 130))
+    // the swap's crash window: live manifest renamed away to `.old`
     val m = new java.io.File(Export.manifestDir(dir))
-    val oldDir = new java.io.File(Export.manifestDir(dir) + ".old")
-    assert(m.renameTo(oldDir))
+    assert(m.renameTo(new java.io.File(Export.manifestDir(dir) + ".old")))
     spark.catalog.refreshByPath(dir)
-    StreamingIngest.exportShardBatch(docsRange(130, 150), 1L, dir, "doc_id", csCols)
+    append(dir, docsRange(130, 150))
     Export.verifyShards(spark, dir, csCols)
-    assert(Export.readManifest(spark, dir)
-      .agg(sum("n_rows")).as[Long].head() == 150)
+    assert(totalRows(dir) == 150)
   }
 }

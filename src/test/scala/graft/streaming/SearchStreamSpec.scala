@@ -5,8 +5,13 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.TextSearch
+import graft.operators.{BatchStore, TextSearch}
 
+/** The search store protocol of [[graft.operators.BatchStore]]: postings
+  * and positional stores grown by committed batches, their sidecars,
+  * compaction, replay after a crash, and the retrieval takedown. The
+  * suite keeps the name it had when the protocol lived in the streaming
+  * layer, so its test ids stay stable. */
 class SearchStreamSpec extends SparkSpec {
   import spark.implicits._
 
@@ -15,7 +20,7 @@ class SearchStreamSpec extends SparkSpec {
   private def run(df: org.apache.spark.sql.DataFrame, id: Long,
       indexDir: String, compactAt: Int = 0,
       failAfter: Int = Int.MaxValue): Unit =
-    StreamingIngest.searchIndexBatch(df, id, indexDir, "doc_id", "text",
+    BatchStore.searchIndexBatch(df, id, indexDir, "doc_id", "text",
       compactAt, failAfterStep = failAfter)
 
   private def storePostings(indexDir: String): Map[(String, Long), Long] =
@@ -92,21 +97,21 @@ class SearchStreamSpec extends SparkSpec {
       (3L, "???!!!")).toDF("doc_id", "text")
     val b1 = Seq((4L, "beta beta alpha gamma")).toDF("doc_id", "text")
     run(b0, 0L, ix); run(b1, 1L, ix)
-    val dl = StreamingIngest.searchIndexDocLengths(spark, ix, "doc_id")
+    val dl = BatchStore.searchIndexDocLengths(spark, ix, "doc_id")
       .get.as[(Long, Long)].collect().toMap
     assert(dl == Map(1L -> 3L, 2L -> 2L, 3L -> 0L, 4L -> 4L))
     val union = b0.unionByName(b1)
     // THE sidecar law: dir-reader BM25 == the direct corpus operator,
     // even over a corpus containing a token-free document (n_docs and
     // avgdl both count it)
-    val viaDir = StreamingIngest.searchIndexTopKBm25(
+    val viaDir = BatchStore.searchIndexTopKBm25(
       spark, ix, "doc_id", Seq("alpha", "beta"), 10)
       .as[(Long, Long)].collect().toSeq
     val direct = TextSearch.searchTopKBm25(union, "doc_id", "text",
       Seq("alpha", "beta"), 10).as[(Long, Long)].collect().toSeq
     assert(viaDir == direct)
     // …and the rarity twin through the sidecar's n_docs
-    assert(StreamingIngest.searchIndexTopK(
+    assert(BatchStore.searchIndexTopK(
       spark, ix, "doc_id", Seq("alpha", "beta"), 10)
       .as[(Long, Long)].collect().toSeq ==
       TextSearch.searchTopK(union, "doc_id", "text",
@@ -128,11 +133,11 @@ class SearchStreamSpec extends SparkSpec {
   test("totals manifest ≡ derived totals across batches, replay and compaction; readers are O(1)") {
     val ix = tmp("si-totals")
     def derived: (Long, Long) = {
-      val r = spark.read.parquet(StreamingIngest.dlSidecarDir(ix))
+      val r = spark.read.parquet(BatchStore.dlSidecarDir(ix))
         .agg(count(lit(1)), coalesce(sum("__dl"), lit(0L))).head()
       (r.getLong(0), r.getLong(1))
     }
-    def manifest = StreamingIngest.searchIndexTotals(spark, ix)
+    def manifest = BatchStore.searchIndexTotals(spark, ix)
     // batch 0 (incl. a zero-token doc: counted, length 0)
     run(Seq((1L, "alpha beta gamma"), (2L, "..."), (3L, "beta"))
       .toDF("doc_id", "text"), 0L, ix)
@@ -161,12 +166,12 @@ class SearchStreamSpec extends SparkSpec {
     val union = Seq((1L, "alpha beta gamma"), (2L, "..."), (3L, "beta"),
       (4L, "gamma gamma alpha"), (5L, "alpha"), (6L, "beta delta"),
       (7L, "epsilon")).toDF("doc_id", "text")
-    assert(StreamingIngest.searchIndexTopKBm25(spark, ix, "doc_id",
+    assert(BatchStore.searchIndexTopKBm25(spark, ix, "doc_id",
         Seq("alpha", "beta"), 10, allowFullScanFallback = false)
         .as[(Long, Long)].collect().toSeq ==
       TextSearch.searchTopKBm25(union, "doc_id", "text",
         Seq("alpha", "beta"), 10).as[(Long, Long)].collect().toSeq)
-    assert(StreamingIngest.searchIndexTopK(spark, ix, "doc_id",
+    assert(BatchStore.searchIndexTopK(spark, ix, "doc_id",
         Seq("alpha", "beta"), 10, allowFullScanFallback = false)
         .as[(Long, Long)].collect().toSeq ==
       TextSearch.searchTopK(union, "doc_id", "text",
@@ -177,9 +182,9 @@ class SearchStreamSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(ix)
       .getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(new org.apache.hadoop.fs.Path(
-      StreamingIngest.dlSidecarDir(ix) + "/_totals/b4"), false)
+      BatchStore.dlSidecarDir(ix) + "/_totals/b4"), false)
     assert(manifest.isEmpty)
-    assert(StreamingIngest.searchIndexTopK(spark, ix, "doc_id",
+    assert(BatchStore.searchIndexTopK(spark, ix, "doc_id",
         Seq("alpha", "beta"), 10, allowFullScanFallback = false)
         .as[(Long, Long)].collect().toSeq ==
       TextSearch.searchTopK(union, "doc_id", "text",
@@ -191,7 +196,7 @@ class SearchStreamSpec extends SparkSpec {
       .withColumn("batch_id", lit(0L))
       .write.mode("overwrite").parquet(bare)
     val e = intercept[IllegalArgumentException] {
-      StreamingIngest.searchIndexTopKBm25(spark, bare, "doc_id",
+      BatchStore.searchIndexTopKBm25(spark, bare, "doc_id",
         Seq("alpha"), 10, allowFullScanFallback = false)
     }
     assert(e.getMessage.contains("FULL-STORE"))
@@ -215,7 +220,7 @@ class SearchStreamSpec extends SparkSpec {
     val ix = tmp("si-tok-fresh")
     run(Seq((1L, "alpha beta")).toDF("doc_id", "text"), 0L, ix)
     val mPath = new org.apache.hadoop.fs.Path(
-      ix + "/_graft_tokenizer/" + StreamingIngest.TokenizerVersion)
+      ix + "/_graft_tokenizer/" + BatchStore.TokenizerVersion)
     val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
     assert(fs.exists(mPath))
     intercept[IllegalStateException] {
@@ -242,13 +247,13 @@ class SearchStreamSpec extends SparkSpec {
     val b1 = Seq((2L, "two three four")).toDF("doc_id", "text")
     intercept[IllegalStateException] { run(b1, 1L, ix, failAfter = 2) }
     run(b1, 1L, ix)
-    val dlStore = spark.read.parquet(StreamingIngest.dlSidecarDir(ix))
+    val dlStore = spark.read.parquet(BatchStore.dlSidecarDir(ix))
     assert(dlStore.count() == 2)
     assert(dlStore.select("doc_id", "__dl").as[(Long, Long)]
       .collect().toMap == Map(1L -> 2L, 2L -> 3L))
     // compaction folds the sidecar to batch_id −1 with rows preserved
     run(Seq((3L, "five")).toDF("doc_id", "text"), 2L, ix, compactAt = 1)
-    val compacted = spark.read.parquet(StreamingIngest.dlSidecarDir(ix))
+    val compacted = spark.read.parquet(BatchStore.dlSidecarDir(ix))
     assert(compacted.select("batch_id").distinct()
       .as[Long].collect().toSeq == Seq(-1L))
     assert(compacted.select("doc_id", "__dl").as[(Long, Long)]
@@ -309,7 +314,7 @@ class SearchStreamSpec extends SparkSpec {
     run(b0, 0L, ix, compactAt = 2)
     run(b1, 1L, ix, compactAt = 2) // triggers the compaction + swap
     val before = storePostings(ix)
-    val dlBefore = spark.read.parquet(StreamingIngest.dlSidecarDir(ix))
+    val dlBefore = spark.read.parquet(BatchStore.dlSidecarDir(ix))
       .select("doc_id", "__dl").as[(Long, Long)].collect().toMap
     // the whole-query replay shape (a bench/verify loop re-running the
     // same ingest in one session): BOTH batches re-run post-compaction
@@ -317,7 +322,7 @@ class SearchStreamSpec extends SparkSpec {
     run(b1, 1L, ix, compactAt = 2)
     assert(storePostings(ix) == before,
       "a committed batch re-ingested after compaction — markers lost in the swap")
-    assert(spark.read.parquet(StreamingIngest.dlSidecarDir(ix))
+    assert(spark.read.parquet(BatchStore.dlSidecarDir(ix))
       .select("doc_id", "__dl").as[(Long, Long)].collect().toMap == dlBefore)
     // and a genuinely NEW batch still ingests + compacts cleanly on top
     run(Seq((4L, "red")).toDF("doc_id", "text"), 2L, ix, compactAt = 2)
@@ -327,7 +332,7 @@ class SearchStreamSpec extends SparkSpec {
   private def runPos(df: org.apache.spark.sql.DataFrame, id: Long,
       indexDir: String, compactAt: Int = 0,
       failAfter: Int = Int.MaxValue): Unit =
-    StreamingIngest.positionalIndexBatch(df, id, indexDir, "doc_id", "text",
+    BatchStore.positionalIndexBatch(df, id, indexDir, "doc_id", "text",
       compactAt, failAfterStep = failAfter)
 
   test("positional loop: ONE store serves frequency AND positional readers, equal to the direct operators") {
@@ -351,7 +356,7 @@ class SearchStreamSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSeq ==
       TextSearch.searchTopK(union, "doc_id", "text", Seq("red", "blue"), 10)
         .as[(Long, Long)].collect().toSeq)
-    assert(StreamingIngest.searchIndexTopKBm25(spark, ix, "doc_id",
+    assert(BatchStore.searchIndexTopKBm25(spark, ix, "doc_id",
         Seq("red", "blue"), 10).as[(Long, Long)].collect().toSeq ==
       TextSearch.searchTopKBm25(union, "doc_id", "text",
         Seq("red", "blue"), 10).as[(Long, Long)].collect().toSeq)
@@ -382,7 +387,7 @@ class SearchStreamSpec extends SparkSpec {
     runPos(b1, 1L, ix, compactAt = 2)
     assert(posMap() == want ++ Map(("four", 3L) -> ((Seq(0), 1L))))
     // the dl sidecar rode along: corpus-exact lengths after compaction
-    assert(StreamingIngest.searchIndexDocLengths(spark, ix, "doc_id")
+    assert(BatchStore.searchIndexDocLengths(spark, ix, "doc_id")
       .get.as[(Long, Long)].collect().toMap == Map(1L -> 3L, 2L -> 4L, 3L -> 1L))
   }
 
@@ -395,7 +400,7 @@ class SearchStreamSpec extends SparkSpec {
     val b1 = Seq((3L, "beta beta alpha")).toDF("doc_id", "text")
     run(b0, 0L, ix); run(b1, 1L, ix)
     // simulate a pre-sidecar batch: strip batch 0 from the sidecar
-    val dlDir = StreamingIngest.dlSidecarDir(ix)
+    val dlDir = BatchStore.dlSidecarDir(ix)
     val partial = spark.read.parquet(dlDir)
       .filter(col("batch_id") =!= 0L).collect()
     val schema = spark.read.parquet(dlDir).schema
@@ -407,10 +412,10 @@ class SearchStreamSpec extends SparkSpec {
     fs.delete(new org.apache.hadoop.fs.Path(dlDir), true)
     fs.rename(new org.apache.hadoop.fs.Path(dlDir + ".rewrite"),
       new org.apache.hadoop.fs.Path(dlDir))
-    assert(StreamingIngest.searchIndexDocLengths(spark, ix, "doc_id").isEmpty,
+    assert(BatchStore.searchIndexDocLengths(spark, ix, "doc_id").isEmpty,
       "an incomplete sidecar must not be served")
     // the dir reader still answers correctly via the fallback
-    val viaDir = StreamingIngest.searchIndexTopKBm25(
+    val viaDir = BatchStore.searchIndexTopKBm25(
       spark, ix, "doc_id", Seq("alpha"), 10)
       .as[(Long, Long)].collect().map(_._1).toSet
     assert(viaDir == Set(1L, 2L, 3L))
@@ -422,7 +427,7 @@ class SearchStreamSpec extends SparkSpec {
     run(Seq((1L, "one two")).toDF("doc_id", "text"), 0L, ix2)
     val zeroTok = Seq((2L, "!!!"), (3L, "???")).toDF("doc_id", "text")
     intercept[IllegalStateException] {
-      StreamingIngest.searchIndexBatch(zeroTok, 1L, ix2, "doc_id", "text",
+      BatchStore.searchIndexBatch(zeroTok, 1L, ix2, "doc_id", "text",
         compactAtFiles = 0, failAfterStep = 2)
     }
     // compaction triggered by the next committed batch: the postings-
@@ -430,19 +435,19 @@ class SearchStreamSpec extends SparkSpec {
     // guard must skip the dl fold
     run(Seq((4L, "three")).toDF("doc_id", "text"), 2L, ix2, compactAt = 1)
     // replay of the crashed batch converges (overwrite, not append)
-    StreamingIngest.searchIndexBatch(zeroTok, 1L, ix2, "doc_id", "text",
+    BatchStore.searchIndexBatch(zeroTok, 1L, ix2, "doc_id", "text",
       compactAtFiles = 0)
-    val dl = spark.read.parquet(StreamingIngest.dlSidecarDir(ix2))
+    val dl = spark.read.parquet(BatchStore.dlSidecarDir(ix2))
       .select("doc_id", "__dl").as[(Long, Long)].collect().toMap
     assert(dl == Map(1L -> 2L, 2L -> 0L, 3L -> 0L, 4L -> 1L),
       s"zero-token docs double-counted or lost: $dl")
-    assert(spark.read.parquet(StreamingIngest.dlSidecarDir(ix2)).count() == 4)
+    assert(spark.read.parquet(BatchStore.dlSidecarDir(ix2)).count() == 4)
   }
 
   // ------------------------------------------- retrieval-store takedown
 
   private def dlMap(ix: String): Map[Long, Long] =
-    spark.read.parquet(StreamingIngest.dlSidecarDir(ix))
+    spark.read.parquet(BatchStore.dlSidecarDir(ix))
       .groupBy("doc_id").agg(sum("__dl").as("__dl"))
       .as[(Long, Long)].collect().toMap
 
@@ -453,11 +458,11 @@ class SearchStreamSpec extends SparkSpec {
     val b1 = Seq((4L, "beta delta"), (5L, "alpha alpha delta beta"),
       (6L, "...")).toDF("doc_id", "text") // 6 is zero-token: sidecar-only
     run(b0, 0L, ix); run(b1, 1L, ix)
-    val before = StreamingIngest.searchIndexTopKBm25(spark, ix, "doc_id",
+    val before = BatchStore.searchIndexTopKBm25(spark, ix, "doc_id",
       Seq("alpha", "beta"), 10).as[(Long, Long)].collect().toSeq
     // takedown: docs 3 (postings+dl) and 6 (dl ONLY — its terms never
     // entered the store; the sidecar half must still fire)
-    val removed = StreamingIngest.deleteSwapSearchIndex(spark, ix, "doc_id",
+    val removed = BatchStore.deleteSwapSearchIndex(spark, ix, "doc_id",
       Seq(3L, 6L).toDF("doc_id"))
     assert(removed > 0)
     // the reference: a FRESH ingest of the surviving corpus
@@ -468,13 +473,13 @@ class SearchStreamSpec extends SparkSpec {
     assert(storePostings(ix) == storePostings(ix2),
       "post-takedown postings differ from a survivor rebuild")
     assert(dlMap(ix) == dlMap(ix2))
-    assert(StreamingIngest.searchIndexTotals(spark, ix) ==
-      StreamingIngest.searchIndexTotals(spark, ix2),
+    assert(BatchStore.searchIndexTotals(spark, ix) ==
+      BatchStore.searchIndexTotals(spark, ix2),
       "totals manifest did not fold with the takedown")
     // the STRONG form: BM25 through the dir reader (manifest n_docs,
     // sidecar lengths) equals the survivor rebuild's — and differs from
     // the pre-takedown ranking (n_docs/avgdl/df all shifted)
-    def bm25(d: String) = StreamingIngest.searchIndexTopKBm25(spark, d,
+    def bm25(d: String) = BatchStore.searchIndexTopKBm25(spark, d,
       "doc_id", Seq("alpha", "beta"), 10,
       allowFullScanFallback = false).as[(Long, Long)].collect().toSeq
     assert(bm25(ix) == bm25(ix2))
@@ -486,7 +491,7 @@ class SearchStreamSpec extends SparkSpec {
     assert(storePostings(ix) == after,
       "commit markers lost in the takedown swap — replays re-published")
     // re-applying the same list is a no-op (idempotence)
-    StreamingIngest.deleteSwapSearchIndex(spark, ix, "doc_id",
+    BatchStore.deleteSwapSearchIndex(spark, ix, "doc_id",
       Seq(3L, 6L).toDF("doc_id"))
     assert(storePostings(ix) == after && dlMap(ix) == dlMap(ix2))
     // and a genuinely NEW batch still ingests on top (tokenizer marker
@@ -499,7 +504,7 @@ class SearchStreamSpec extends SparkSpec {
     val ix = tmp("si-td-refuse")
     run(Seq((1L, "alpha beta"), (2L, "beta")).toDF("doc_id", "text"), 0L, ix)
     val eAll = intercept[IllegalArgumentException] {
-      StreamingIngest.deleteSwapSearchIndex(spark, ix, "doc_id",
+      BatchStore.deleteSwapSearchIndex(spark, ix, "doc_id",
         Seq(1L, 2L).toDF("doc_id"))
     }
     assert(eAll.getMessage.contains("EVERY row"))
@@ -509,13 +514,13 @@ class SearchStreamSpec extends SparkSpec {
       run(Seq((3L, "gamma")).toDF("doc_id", "text"), 1L, ix, failAfter = 1)
     }
     val ePend = intercept[IllegalArgumentException] {
-      StreamingIngest.deleteSwapSearchIndex(spark, ix, "doc_id",
+      BatchStore.deleteSwapSearchIndex(spark, ix, "doc_id",
         Seq(1L).toDF("doc_id"))
     }
     assert(ePend.getMessage.contains("UNCOMMITTED"))
     // replay the crashed batch; the takedown then proceeds
     run(Seq((3L, "gamma")).toDF("doc_id", "text"), 1L, ix)
-    StreamingIngest.deleteSwapSearchIndex(spark, ix, "doc_id",
+    BatchStore.deleteSwapSearchIndex(spark, ix, "doc_id",
       Seq(1L).toDF("doc_id"))
     assert(!storePostings(ix).contains(("alpha", 1L)))
   }
@@ -527,13 +532,13 @@ class SearchStreamSpec extends SparkSpec {
     // permanently distrust a complete sidecar (review finding)
     val ix = tmp("si-td-dlonly")
     run(Seq((1L, "alpha beta"), (2L, "alpha"), (3L, "...")).toDF("doc_id", "text"), 0L, ix)
-    StreamingIngest.deleteSwapSearchIndex(spark, ix, "doc_id",
+    BatchStore.deleteSwapSearchIndex(spark, ix, "doc_id",
       Seq(3L).toDF("doc_id"))
     // the strict readers still serve (totals manifest + sidecar intact)
-    assert(StreamingIngest.searchIndexTotals(spark, ix) == Some((2L, 3L)))
+    assert(BatchStore.searchIndexTotals(spark, ix) == Some((2L, 3L)))
     val ix2 = tmp("si-td-dlonly-ref")
     run(Seq((1L, "alpha beta"), (2L, "alpha")).toDF("doc_id", "text"), 0L, ix2)
-    def bm25(d: String) = StreamingIngest.searchIndexTopKBm25(spark, d,
+    def bm25(d: String) = BatchStore.searchIndexTopKBm25(spark, d,
       "doc_id", Seq("alpha"), 10, allowFullScanFallback = false)
       .as[(Long, Long)].collect().toSeq
     assert(bm25(ix) == bm25(ix2))
@@ -545,14 +550,14 @@ class SearchStreamSpec extends SparkSpec {
     run(Seq((1L, "alpha beta"), (2L, "beta"), (3L, "gamma beta"))
       .toDF("doc_id", "text"), 0L, ix)
     Seq(2L).toDF("doc_id").write.parquet(pend + "/ids.parquet")
-    StreamingIngest.searchIndexBatch(
+    BatchStore.searchIndexBatch(
       Seq((4L, "delta")).toDF("doc_id", "text"), 1L, ix, "doc_id", "text",
       compactAtFiles = 0, applyDeletesFrom = pend)
     assert(new java.io.File(pend + "/_applied/ids.parquet").exists())
     // the SAME filename dropped again (the monthly-takedown shape that
     // wedged the old rename-into-existing-destination)
     Seq(3L).toDF("doc_id").write.parquet(pend + "/ids.parquet")
-    StreamingIngest.searchIndexBatch(
+    BatchStore.searchIndexBatch(
       Seq((5L, "epsilon")).toDF("doc_id", "text"), 2L, ix, "doc_id", "text",
       compactAtFiles = 0, applyDeletesFrom = pend)
     assert(new java.io.File(pend + "/_applied/ids.parquet-1").exists())
@@ -575,7 +580,7 @@ class SearchStreamSpec extends SparkSpec {
     // (failpoint 11 fires inside the takedown's two-halves window)
     Seq(3L).toDF("doc_id").write.parquet(pend + "/list1")
     intercept[IllegalStateException] {
-      StreamingIngest.positionalIndexBatch(
+      BatchStore.positionalIndexBatch(
         Seq((9L, "green")).toDF("doc_id", "text"), 2L, ix, "doc_id", "text",
         compactAtFiles = 0, failAfterStep = 11, applyDeletesFrom = pend)
     }
@@ -586,7 +591,7 @@ class SearchStreamSpec extends SparkSpec {
       "list consumed before both halves completed")
     // the next batch entry (a replay of the committed batch 2) re-applies
     // the pending list to completion
-    StreamingIngest.positionalIndexBatch(
+    BatchStore.positionalIndexBatch(
       Seq((9L, "green")).toDF("doc_id", "text"), 2L, ix, "doc_id", "text",
       compactAtFiles = 0, applyDeletesFrom = pend)
     assert(!new java.io.File(pend + "/list1").exists() &&
@@ -605,34 +610,5 @@ class SearchStreamSpec extends SparkSpec {
         4L, 10).as[(Long, Long)].collect().toSeq)
     // dl sidecar folded consistently (batch 2's doc 9 remains)
     assert(dlMap(ix) == dlMap(ix2) + (9L -> 1L))
-  }
-
-  test("the real stream: AvailableNow drains build the index exactly once") {
-    val drop = tmp("si-drop"); val ix = tmp("si-drain"); val ckpt = tmp("si-ckpt")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    def dropBatch(name: String, rows: Seq[(Long, String)]): Unit =
-      java.nio.file.Files.write(java.nio.file.Paths.get(s"$drop/$name"),
-        rows.map { case (i, t) => s"$i\t$t" }.mkString("\n").getBytes("UTF-8"))
-    def drain(): Unit =
-      StreamingIngest.searchIndexIngestStream(
-        spark.readStream.schema(schema).option("sep", "\t").csv(drop),
-        ix, ckpt, "doc_id", "text")
-        .start().awaitTermination()
-    dropBatch("b0.tsv", Seq((1L, "hello world"), (2L, "hello spark")))
-    drain()
-    dropBatch("b1.tsv", Seq((3L, "world of spark")))
-    drain()
-    assert(storePostings(ix) == Map(
-      ("hello", 1L) -> 1L, ("world", 1L) -> 1L,
-      ("hello", 2L) -> 1L, ("spark", 2L) -> 1L,
-      ("world", 3L) -> 1L, ("of", 3L) -> 1L, ("spark", 3L) -> 1L))
-    val top = TextSearch.searchStoreTopK(
-      spark.read.parquet(ix), "doc_id", Seq("spark"), 1)
-      .as[(Long, Long)].collect().toSeq
-    assert(top.map(_._1) == Seq(2L))
   }
 }

@@ -6,8 +6,12 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.functions.Hashing
-import graft.operators.Sketch
+import graft.operators.{BatchStore, Sketch}
 
+/** The sketch rollup store of [[graft.operators.BatchStore]]: committed
+  * batches of per-group HLL and count-min sketches and the fold that
+  * reads them. The suite keeps the name it had when the protocol lived
+  * in the streaming layer, so its test ids stay stable. */
 class SketchStreamSpec extends SparkSpec {
   import spark.implicits._
 
@@ -17,21 +21,21 @@ class SketchStreamSpec extends SparkSpec {
     ids.map(i => (i.toLong, group(i), Hashing.h60Jvm(s"u${i % 37}")))
       .toDF("event_id", "g", "h")
 
-  private def run(df: org.apache.spark.sql.DataFrame, id: Long, store: String,
-      failAfter: Int = Int.MaxValue): Unit =
-    StreamingIngest.sketchRollupBatch(df, id, store, "g", "h",
+  private def runSketch(df: org.apache.spark.sql.DataFrame, id: Long,
+      store: String, failAfter: Int = Int.MaxValue): Unit =
+    BatchStore.sketchRollupBatch(df, id, store, "g", "h",
       hllP = 5, cmsDepth = 3, cmsWidth = 64, failAfterStep = failAfter)
 
-  private def totals(store: String) =
-    StreamingIngest.sketchRollupTotals(spark, store, "g")
+  private def sketchTotals(store: String) =
+    BatchStore.sketchRollupTotals(spark, store, "g")
 
-  private def direct(df: org.apache.spark.sql.DataFrame) =
+  private def directSketch(df: org.apache.spark.sql.DataFrame) =
     df.groupBy("g").agg(
       Sketch.hllSketch(col("h"), 5).as("hll"),
       Sketch.cmsSketch(col("h"), 3, 64).as("cms"),
       count(lit(1)).as("n_rows"))
 
-  private def asMap(df: org.apache.spark.sql.DataFrame) =
+  private def sketchMap(df: org.apache.spark.sql.DataFrame) =
     df.select("g", "hll", "cms", "n_rows")
       .as[(String, Seq[Int], Seq[Long], Long)].collect()
       .map(r => r._1 -> (r._2, r._3, r._4)).toMap
@@ -39,32 +43,34 @@ class SketchStreamSpec extends SparkSpec {
   test("two committed batches fold to the direct one-shot sketches (merge law end-to-end)") {
     val store = tmp("sk-law")
     val all = rows(1 to 500, i => s"g${i % 3}")
-    run(all.filter(col("event_id") % 2 === 0), 0L, store)
-    run(all.filter(col("event_id") % 2 === 1), 1L, store)
-    assert(asMap(totals(store)) == asMap(direct(all)))
+    runSketch(all.filter(col("event_id") % 2 === 0), 0L, store)
+    runSketch(all.filter(col("event_id") % 2 === 1), 1L, store)
+    assert(sketchMap(sketchTotals(store)) == sketchMap(directSketch(all)))
   }
 
   test("crash between publish and commit: reader excludes the batch; replay converges") {
     val store = tmp("sk-crash")
     val b0 = rows(1 to 200, _ => "g")
     val b1 = rows(201 to 400, _ => "g")
-    run(b0, 0L, store)
-    intercept[IllegalStateException] { run(b1, 1L, store, failAfter = 1) }
+    runSketch(b0, 0L, store)
+    intercept[IllegalStateException] { runSketch(b1, 1L, store, failAfter = 1) }
     // the uncommitted batch's data files exist but the fold ignores them
-    assert(asMap(totals(store)) == asMap(direct(b0)))
+    assert(sketchMap(sketchTotals(store)) == sketchMap(directSketch(b0)))
     // replay re-publishes by name and commits; fold converges
-    run(b1, 1L, store)
-    assert(asMap(totals(store)) == asMap(direct(b0.unionByName(b1))))
+    runSketch(b1, 1L, store)
+    assert(sketchMap(sketchTotals(store)) ==
+      sketchMap(directSketch(b0.unionByName(b1))))
     // re-application is a committed-batch no-op
-    run(b1, 1L, store)
-    assert(asMap(totals(store)) == asMap(direct(b0.unionByName(b1))))
+    runSketch(b1, 1L, store)
+    assert(sketchMap(sketchTotals(store)) ==
+      sketchMap(directSketch(b0.unionByName(b1))))
   }
 
   test("parameter mismatch refuses loudly at ingest, not at merge time") {
     val store = tmp("sk-params")
-    run(rows(1 to 50, _ => "g"), 0L, store)
+    runSketch(rows(1 to 50, _ => "g"), 0L, store)
     val e = intercept[IllegalArgumentException] {
-      StreamingIngest.sketchRollupBatch(rows(51 to 99, _ => "g"), 1L, store,
+      BatchStore.sketchRollupBatch(rows(51 to 99, _ => "g"), 1L, store,
         "g", "h", hllP = 6, cmsDepth = 3, cmsWidth = 64)
     }
     assert(e.getMessage.contains("hll5-cms3x64"))
@@ -74,47 +80,21 @@ class SketchStreamSpec extends SparkSpec {
     val store = tmp("sk-null")
     val df = Seq((1L, "g", Hashing.h60Jvm("a")), (2L, null, Hashing.h60Jvm("b")))
       .toDF("event_id", "g", "h")
-    run(df, 0L, store)
-    val t = totals(store)
+    runSketch(df, 0L, store)
+    val t = sketchTotals(store)
     assert(t.count() == 1L)
     val est = t.select(Sketch.hllEstimate(col("hll"))).as[Double].head()
     assert(est > 0.5 && est < 3.0, s"estimate $est for 1 distinct")
   }
 
-  test("the real stream: AvailableNow drains append committed sketch rows, fold equals direct") {
-    val drop = tmp("sk-drop"); val store = tmp("sk-drain"); val ckpt = tmp("sk-ckpt")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("g",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("h",
-        org.apache.spark.sql.types.LongType)))
-    def dropBatch(name: String, rows: Seq[(String, Long)]): Unit =
-      java.nio.file.Files.write(java.nio.file.Paths.get(s"$drop/$name"),
-        rows.map { case (g, h) => s"$g\t$h" }.mkString("\n").getBytes("UTF-8"))
-    def drain(): Unit =
-      StreamingIngest.sketchRollupStream(
-        spark.readStream.schema(schema).option("sep", "\t").csv(drop),
-        store, ckpt, "g", "h", hllP = 5, cmsDepth = 3, cmsWidth = 64)
-        .start().awaitTermination()
-    val b0 = Seq("x" -> Hashing.h60Jvm("u1"), "x" -> Hashing.h60Jvm("u2"),
-      "y" -> Hashing.h60Jvm("u1"))
-    val b1 = Seq("x" -> Hashing.h60Jvm("u3"), "y" -> Hashing.h60Jvm("u1"))
-    dropBatch("b0.tsv", b0)
-    drain()
-    dropBatch("b1.tsv", b1)
-    drain()
-    val unioned = (b0 ++ b1).toDF("g", "h")
-    assert(asMap(totals(store)) == asMap(direct(unioned)))
-  }
-
   test("reader refuses a missing or uncommitted-only store") {
     intercept[IllegalArgumentException] {
-      totals(tmp("sk-missing")).collect()
+      sketchTotals(tmp("sk-missing")).collect()
     }
     val store = tmp("sk-uncommitted")
     intercept[IllegalStateException] {
-      run(rows(1 to 9, _ => "g"), 0L, store, failAfter = 1)
+      runSketch(rows(1 to 9, _ => "g"), 0L, store, failAfter = 1)
     }
-    intercept[IllegalArgumentException] { totals(store).collect() }
+    intercept[IllegalArgumentException] { sketchTotals(store).collect() }
   }
 }
